@@ -20,7 +20,7 @@ object ScaleProbe {
   private[graft] val knownSections = Set("minhash", "ann", "text",
     "mega-bucket", "rank", "merge", "mor", "pq", "skew", "sem", "stream",
     "width", "streamparts", "iceimport", "deltaimport", "annrank", "lloyd",
-    "lakestream", "ivfsearch", "replicate", "imisearch", "imicell")
+    "lakestream", "ivfsearch", "replicate", "imisearch", "imicell", "commits")
 
   /** Validates requested section names against the whitelist; throws on
     * any unknown name. Factored out of main so the contract is spec-pinned.
@@ -781,6 +781,74 @@ object ScaleProbe {
       val buckets = streaming.StreamingQueries.replayProbe(spark, loaded)
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"[scale] stream-replay ${mult}x: events=$n%d buckets=$buckets%d time=$dt%.1fs")
+    }
+
+    // COMMIT-COUNT probe: a table of N single-file appends of 10 rows.
+    // Read planning must not grow with N — every read builds its scan from
+    // the commits' recorded file lists, so it neither lists dirs nor
+    // infers schemas, and starts no Spark job. Each plan uses a FRESH
+    // catalog (the SQL façade's shape: one catalog per statement), so no
+    // per-instance memo flatters the figure. Reports plan ms and jobs
+    // (median of 3), count ms, and the table's metadata bytes: commit
+    // sidecars, schema files and manifests (the last grows O(N²), each
+    // version listing every entry).
+    if (on("commits")) for (n <- Seq(10, 100, 1000)) {
+      val root = s"/tmp/graft_scale_commits_$n"
+      val hfs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      hfs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val cat = lake.LakeCatalog(spark, root)
+      val t0 = System.nanoTime()
+      for (i <- 0 until n)
+        cat.write("c", "t", spark.range(i * 10L, i * 10L + 10L, 1L, 1).toDF("id"),
+          SaveMode.Append)
+      val appendMs = (System.nanoTime() - t0) / 1e6 / n
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      def median3(f: => Double): Double = Seq(f, f, f).sorted.apply(1)
+      def planOnce(): (Double, Int) = {
+        org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+        val j0 = jobs.get()
+        val p0 = System.nanoTime()
+        lake.LakeCatalog(spark, root).read("c", "t").queryExecution.executedPlan
+        val ms = (System.nanoTime() - p0) / 1e6
+        org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+        (ms, jobs.get() - j0)
+      }
+      val plans = Seq(planOnce(), planOnce(), planOnce())
+      spark.sparkContext.removeSparkListener(listener)
+      val planMs = plans.map(_._1).sorted.apply(1)
+      val planJobs = plans.map(_._2).sorted.apply(1)
+      var rows = 0L
+      val countMs = median3 {
+        val c0 = System.nanoTime()
+        rows = lake.LakeCatalog(spark, root).read("c", "t").count()
+        (System.nanoTime() - c0) / 1e6
+      }
+      require(rows == 10L * n, s"commits probe read $rows rows, wrote ${10L * n}")
+      def bytesUnder(rel: String, keep: String => Boolean): Long = {
+        val p = new org.apache.hadoop.fs.Path(s"$root/c/t/$rel")
+        if (!hfs.exists(p)) 0L
+        else {
+          val it = hfs.listFiles(p, true)
+          var sum = 0L
+          while (it.hasNext) {
+            val st = it.next()
+            if (keep(st.getPath.getName)) sum += st.getLen
+          }
+          sum
+        }
+      }
+      val sidecarB = bytesUnder("data", _ == "_graft_stats.tsv")
+      val schemaB = bytesUnder("_graft_schemas", _.endsWith(".json"))
+      val manifestB = bytesUnder("manifests", _.endsWith(".txt"))
+      println(f"[scale] commits n=$n%d: append=$appendMs%.0fms/commit " +
+        f"read_plan=$planMs%.0fms plan_jobs=$planJobs%d count=$countMs%.0fms " +
+        f"sidecar_bytes=$sidecarB%d schema_bytes=$schemaB%d manifest_bytes=$manifestB%d")
     }
     spark.stop()
   }

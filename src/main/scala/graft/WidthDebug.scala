@@ -76,7 +76,7 @@ object WidthDebug {
           spark.sessionState.newHadoopConf(),
           new org.apache.hadoop.fs.Path(out2),
           spark.sessionState.conf.sessionLocalTimeZone)
-        println(s"[width] stats rows=${r.map(_._1)} cols=${r.map(_._2.length)}")
+        println(s"[width] stats rows=${r.map(_.rows)} cols=${r.map(_.cols.length)}")
       }
       spark.stop(); return
     }

@@ -3,9 +3,11 @@ package graft.lake
 import java.nio.charset.StandardCharsets
 import scala.util.Using
 
+import graft.lake.LakeCatalog.{CommitRecord, Sidecar}
 import graft.sources.SchemaTools
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, GraftFileIndex, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Thrown when an optimistic commit loses: the table's latest version moved
   * past the version the writer staged against (or another writer claimed the
@@ -25,11 +27,14 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
   *   <root>/<ns>/<table>/manifests/v00001.txt   # one committed version; each
   *                                              # line = a relative data dir
   *   <root>/<ns>/<table>/data/<commit-uuid>/    # parquet files of one commit
+  *        .../_graft_stats.tsv                  # its stats + commit record
+  *   <root>/<ns>/<table>/_graft_schemas/<id>.json # one per distinct schema
   * }}}
   * A version's dataset is the union of its listed data dirs, so APPEND
   * commits reference prior data instead of rewriting it (manifest reuse, the
   * Iceberg idea) — at 100 TB an append writes only the new files plus a
-  * few-KB manifest. OVERWRITE starts a fresh file list.
+  * few-KB manifest. OVERWRITE starts a fresh file list. Reads plan from
+  * the commit records ([[writeStats]]) without listing or inferring.
   *
   * ALL metadata IO goes through the Hadoop FileSystem API resolved from the
   * root URI, so the same catalog runs on `file://`, `hdfs://` and `s3a://`
@@ -142,8 +147,9 @@ final class LakeCatalog(
   // ----- snapshots -------------------------------------------------------
 
   def versions(ns: String, t: String): Seq[Int] =
-    backend.list(manifestDir(ns, t))
-      .filter(_.matches("v\\d+\\.txt")).map(_.drop(1).dropRight(4).toInt).sorted
+    backend.list(manifestDir(ns, t)).collect {
+      case LakeCatalog.ManifestName(v) => v.toInt
+    }.sorted
 
   private[lake] def manifestEntries(ns: String, t: String, version: Int): Seq[String] =
     new String(backend.readBytes(manifestFile(ns, t, version)), StandardCharsets.UTF_8)
@@ -293,16 +299,20 @@ final class LakeCatalog(
 
   /** Streaming-source seam (r15 `maxBytesPerTrigger`): the parquet files
     * of one commit dir — (name, bytes) sorted by name — when the dir is
-    * FLAT (no hive partitioning), None otherwise. One `listStatus` of
-    * metadata; commit dirs are immutable so callers may cache.
+    * FLAT (no hive partitioning), None otherwise. Answered from the commit
+    * record when there is one ([[writeStats]]); only unrecorded dirs pay
+    * a `listStatus`. Commit dirs are immutable so callers may cache.
     */
-  def commitFilesIfFlat(ns: String, t: String, rel: String): Option[Seq[(String, Long)]] = {
-    val sts = fs.listStatus(new Path(tPath(ns, t), rel))
-    if (sts.exists(_.isDirectory)) None
-    else Some(sts.toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName).map(st => (st.getPath.getName, st.getLen)))
-  }
+  def commitFilesIfFlat(ns: String, t: String, rel: String): Option[Seq[(String, Long)]] =
+    commitRecord(ns, t, rel) match {
+      case Some(r) => Some(r.files.map(f => (f.name, f.bytes)).sortBy(_._1))
+      case None =>
+        val sts = fs.listStatus(new Path(tPath(ns, t), rel))
+        if (sts.exists(_.isDirectory)) None
+        else Some(sts.toSeq
+          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+          .sortBy(_.getPath.getName).map(st => (st.getPath.getName, st.getLen)))
+    }
 
   /** Total bytes under a commit dir (nested layouts included) — the
     * byte-cap admission weight of an UNSPLITTABLE unit.
@@ -344,8 +354,15 @@ final class LakeCatalog(
         case None => readDirs(ns, t, fullDirs)
       })
     val parts = partials.map { case (rel, names) =>
-      val d = new Path(tPath(ns, t), rel)
-      spark.read.parquet(names.map(n => new Path(d, n).toString): _*)
+      commitRecord(ns, t, rel) match {
+        case Some(r) =>
+          val want = names.toSet
+          GraftFileIndex.scan(spark,
+            r.statuses.filter(st => want(st.getPath.getName)), r.schema)
+        case None =>
+          val d = new Path(tPath(ns, t), rel)
+          spark.read.parquet(names.map(n => new Path(d, n).toString): _*)
+      }
     }
     SchemaTools.unifySchemas(fulls ++ parts)
   }
@@ -363,75 +380,46 @@ final class LakeCatalog(
   private[lake] def entriesOf(ns: String, t: String, version: Int): Seq[String] =
     manifestEntries(ns, t, version)
 
-  /** Scan-group the commit dirs: FLAT (no subdirectory) dirs with equal
-    * schemas merge into one multi-path group, partitioned/evolved dirs
-    * stay per-dir. A 10k-commit append-only table then plans O(1) scan
-    * nodes instead of 10k — per-scan planning + codegen overhead was the
-    * dominant cost of many-commit reads (probe-measured: 64 per-commit
-    * scans cost ~10x one merged scan on the same rows), and commit count
-    * is exactly what grows on an append-heavy 100 TB table. Partitioned
-    * commits keep their per-dir `basePath` scan (partition-column
-    * recovery); schema inference per dir was already paid by the
-    * per-dir path, so grouping adds no IO.
+  /** Scans of the given commit dirs. Dirs with a commit RECORD
+    * ([[writeStats]]) scan from their recorded files through the catalog
+    * FileIndex ([[GraftFileIndex]]), ONE scan node per schema id: a
+    * 10k-commit append-only table plans O(1) scan nodes instead of 10k
+    * (per-scan planning + codegen overhead was the dominant cost of
+    * many-commit reads), and planning neither lists a dir nor infers a
+    * schema, so it starts no Spark job whichever catalog instance plans
+    * it. Dirs without a record — written before records existed,
+    * hive-partitioned, or with the sidecar missing — keep their own
+    * `basePath` scan (partition-column recovery, per-dir schema
+    * inference), the only fallback. Returns the grouped scans and the
+    * fallback (dir, scan) pairs in `rels` order.
     */
-  /** Memoized flatness/schema probes: commit dirs are IMMUTABLE once
-    * committed (rewrites mint fresh uuid dirs; vacuum only ever deletes),
-    * so a probe result never goes stale — repeated reads of the same
-    * snapshot must not re-pay the per-commit FS metadata sweep, and on a
-    * slow object store re-probing is what turns the scan-group timeout
-    * into a read failure.
-    */
-  private val probeCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, String, String), Option[org.apache.spark.sql.types.StructType]]()
-
-  private def scanGroups(ns: String, t: String, rels: Seq[String])
-      : (Seq[Seq[String]], Seq[String]) = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.DurationInt
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    // flatness probe + schema inference are one driver-side FS round
-    // trip per commit — memoize per immutable commit dir, and run the
-    // misses CONCURRENTLY or a 1000-commit table pays 1000 sequential
-    // metadata RTTs before any job starts (this, not scan work,
-    // dominated the many-commit probe)
-    val misses = rels.filterNot(rel => probeCache.containsKey((ns, t, rel)))
-    Await.result(
-      Future.sequence(misses.toList.map { rel =>
-        Future {
-          val p = new Path(tPath(ns, t), rel)
-          val flat = fs.exists(p) && !fs.listStatus(p).exists(_.isDirectory)
-          val sch = if (flat) Some(spark.read.parquet(p.toString).schema) else None
-          probeCache.put((ns, t, rel), sch)
-        }
-      }), 10.minutes)
-    // resolve in the caller's rel order so group membership stays stable
-    val probed = rels.toList.map(rel => (rel, probeCache.get((ns, t, rel))))
-    val groups = scala.collection.mutable.LinkedHashMap[
-      org.apache.spark.sql.types.StructType, Vector[String]]()
-    probed.foreach {
-      case (rel, Some(sch)) =>
-        groups(sch) = groups.getOrElse(sch, Vector.empty) :+ rel
+  private def scans(ns: String, t: String, rels: Seq[String])
+      : (Seq[DataFrame], Seq[(String, DataFrame)]) = {
+    val table = tableUri(ns, t)
+    val recorded = rels.map(rel => rel -> sidecar(table, rel).flatMap(_.record))
+    val groups = scala.collection.mutable.LinkedHashMap[String, (StructType, Vector[FileStatus])]()
+    recorded.foreach {
+      case (_, Some(r)) =>
+        val files = groups.get(r.schemaId).fold(Vector.empty[FileStatus])(_._2)
+        groups(r.schemaId) = (r.schema, files ++ r.statuses)
       case _ => ()
     }
-    (groups.values.map(_.toSeq).toSeq,
-      probed.collect { case (rel, None) => rel })
+    (groups.values.toSeq.map { case (schema, files) =>
+      GraftFileIndex.scan(spark, files, schema)
+    }, recorded.collect { case (rel, None) =>
+      val d = new Path(tPath(ns, t), rel).toString
+      rel -> spark.read.option("basePath", d).parquet(d)
+    })
   }
 
-  /** Union of the given commit dirs, schemas unified by name. Flat
-    * same-schema dirs scan as ONE node ([[scanGroups]]); each remaining
-    * dir keeps its own scan (its own partition layout / schema
-    * generation: schema evolution across commits).
+  /** Union of the given commit dirs, schemas unified by name. Recorded
+    * same-schema dirs scan as ONE node ([[scans]]); each remaining dir
+    * keeps its own scan (its own partition layout / schema generation:
+    * schema evolution across commits).
     */
   private[lake] def readDirs(ns: String, t: String, rels: Seq[String]): DataFrame = {
-    val (groups, perDir) = scanGroups(ns, t, rels)
-    SchemaTools.unifySchemas(
-      groups.map(g =>
-        spark.read.parquet(g.map(r => new Path(tPath(ns, t), r).toString): _*)) ++
-        perDir.map { rel =>
-          val d = new Path(tPath(ns, t), rel).toString
-          spark.read.option("basePath", d).parquet(d)
-        })
+    val (grouped, perDir) = scans(ns, t, rels)
+    SchemaTools.unifySchemas(grouped ++ perDir.map(_._2))
   }
 
   /** Like [[readDirs]] but every row carries its commit dir in a tag
@@ -450,12 +438,10 @@ final class LakeCatalog(
     // segments, which is only exact for plain "data/<uuid>" entries —
     // deeper entries (z-buckets) keep their per-dir literal tag
     val (groupable, deep) = rels.partition(_.count(_ == '/') == 1)
-    val (groups, nested) = scanGroups(ns, t, groupable)
-    val rawGroups = groups.map(g =>
-      spark.read.parquet(g.map(r => new Path(tPath(ns, t), r).toString): _*))
-    val rawPer = (nested ++ deep).map { rel =>
-      val d = new Path(tPath(ns, t), rel).toString
-      rel -> spark.read.option("basePath", d).parquet(d)
+    val (rawGroups, fallback) = scans(ns, t, groupable)
+    val rawPer = fallback ++ deep.map { rel =>
+      val (g, p) = scans(ns, t, Seq(rel))
+      rel -> (g ++ p.map(_._2)).head
     }
     val tag = StatsOrder.freshTag((rawGroups ++ rawPer.map(_._2)).flatMap(_.columns))
     // deletion-vector-marked rows must not count as matches (they are
@@ -574,24 +560,17 @@ final class LakeCatalog(
     */
   private def readDirsWithKey(ns: String, t: String, rels: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val (groups, perDir) = scanGroups(ns, t, rels)
-    val frames =
-      groups.map(g =>
-        spark.read.parquet(g.map(r => new Path(tPath(ns, t), r).toString): _*)) ++
-        perDir.map { rel =>
-          val d = new Path(tPath(ns, t), rel).toString
-          spark.read.option("basePath", d).parquet(d)
-        }
-    SchemaTools.unifySchemas(frames.map(
+    val (grouped, perDir) = scans(ns, t, rels)
+    SchemaTools.unifySchemas((grouped ++ perDir.map(_._2)).map(
       _.withColumn("__graft_file", fileKeyExpr)
         .withColumn("__graft_pos", col("_metadata.row_index"))))
   }
 
-  /** Union of the given deletion-vector dirs: (_dv_file, _dv_pos). */
+  /** Union of the given deletion-vector dirs: (_dv_file, _dv_pos). Vector
+    * dirs are flat commits with records, so this plans like any read.
+    */
   private def dvFrame(ns: String, t: String, dvs: Seq[String]): DataFrame =
-    SchemaTools.unifySchemas(dvs.map { rel =>
-      spark.read.parquet(new Path(tPath(ns, t), rel).toString)
-    })
+    readDirs(ns, t, dvs)
 
   /** Total marked rows across the given dv sidecars — metadata-only (each
     * sidecar commit carries its exact row count; a sidecar predating stats
@@ -1685,19 +1664,103 @@ final class LakeCatalog(
     * second scan of the data ([[ParquetFooterStats]]); layouts the footer
     * reader can't cover scan-equivalently (partitioned commits, exotic
     * types) fall back to one aggregation scan of the new commit only.
+    *
+    * The same footers make the COMMIT RECORD of a flat dir, appended to
+    * the sidecar after the stats lines:
+    * {{{
+    *   schema <TAB> <schema id>
+    *   suffix <TAB> <urlenc name tail every file shares>   (2+ files)
+    *   file <TAB> <urlenc name minus tail> <TAB> <bytes> <TAB> <rows> <TAB> <mtime ms>
+    * }}}
+    * one `file` line per parquet file. The schema itself is written once
+    * per distinct schema, content-addressed, as
+    * `<table>/_graft_schemas/<id>.json` (the Spark schema JSON every file's
+    * footer declares; the id is a hash of it) — a wide table's schema
+    * would otherwise repeat in every commit. Reads plan recorded dirs from
+    * this record alone ([[scans]]). No record is written when the footer
+    * path does not apply or the files disagree on the schema; such dirs,
+    * and dirs committed before records existed, read by listing — the
+    * only fallback. [[commitStats]] ignores the record lines.
     */
   private def writeStats(ns: String, t: String, rel: String): Long = {
     val dir = new Path(tPath(ns, t), rel)
+    def footerSchema(p: Path, footer: org.apache.parquet.hadoop.metadata.ParquetMetadata) =
+      scala.util.Try(GraftFileIndex.footerSchema(spark, p, footer)).toOption
     ParquetFooterStats.forDir(fs, spark.sessionState.newHadoopConf(), dir,
-        spark.sessionState.conf.sessionLocalTimeZone) match {
-      case Some((rows, cols)) =>
-        val lines = s"rows\t$rows" +: cols.map { case (name, (kind, mn, mx)) =>
+        spark.sessionState.conf.sessionLocalTimeZone, footerSchema) match {
+      case Some(st) =>
+        val stats = s"rows\t${st.rows}" +: st.cols.map { case (name, (kind, mn, mx)) =>
           s"col\t${enc(name)}\t$kind\t${enc(mn)}\t${enc(mx)}"
         }
+        val record = st.schema.toSeq.flatMap { schema =>
+          val suffix = commonSuffix(st.files.map(_.name))
+          (s"schema\t${putSchema(ns, t, schema)}" +:
+            (if (suffix.isEmpty) Nil else Seq(s"suffix\t${enc(suffix)}"))) ++
+            st.files.map(f => s"file\t${enc(f.name.dropRight(suffix.length))}\t" +
+              s"${f.bytes}\t${f.rows}\t${f.mtime}")
+        }
         Using.resource(fs.create(statsFile(ns, t, rel), true))(
-          _.write(lines.mkString("\n").getBytes(StandardCharsets.UTF_8)))
-        rows
+          _.write((stats ++ record).mkString("\n").getBytes(StandardCharsets.UTF_8)))
+        st.rows
       case None => scanStats(ns, t, rel)
+    }
+  }
+
+  /** Write `schema` under its content id unless that file exists; returns
+    * the id. Concurrent writers of the same schema write identical bytes,
+    * each through its own temp file, so the published file is never torn.
+    */
+  private def putSchema(ns: String, t: String, schema: StructType): String = {
+    val json = schema.json
+    val id = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(json.getBytes(StandardCharsets.UTF_8)).take(8).map(b => f"$b%02x").mkString
+    val p = new Path(schemaPath(tableUri(ns, t), id))
+    if (!fs.exists(p)) {
+      val tmp = new Path(p.getParent, s".$id-${java.util.UUID.randomUUID()}.tmp")
+      Using.resource(fs.create(tmp, true))(_.write(json.getBytes(StandardCharsets.UTF_8)))
+      if (!fs.rename(tmp, p)) deleteRec(tmp)
+    }
+    id
+  }
+
+  /** Qualified URI of a table dir: the prefix of every memo key, so the
+    * memos see one name per table however its root was spelled.
+    */
+  private def tableUri(ns: String, t: String): String =
+    fs.makeQualified(tPath(ns, t)).toString
+
+  /** The longest tail all `names` share, leaving at least one character
+    * of each; empty for fewer than two names. One write names its files
+    * `part-<n>-<job uuid>-c000.<codec>.parquet`, so a many-file commit
+    * stores that tail once instead of in every `file` line.
+    */
+  private def commonSuffix(names: Seq[String]): String =
+    if (names.size < 2) ""
+    else {
+      val first = names.head
+      val limit = names.map(_.length).min - 1
+      var n = 0
+      while (n < limit && names.forall(x => x.charAt(x.length - 1 - n) == first.charAt(first.length - 1 - n)))
+        n += 1
+      first.takeRight(n)
+    }
+
+  private def schemaPath(table: String, id: String): String =
+    s"$table/_graft_schemas/$id.json"
+
+  /** The schema recorded under `id`, None when its file is unreadable.
+    * Memoized process-wide: a content-addressed file never changes.
+    */
+  private def schemaOf(table: String, id: String): Option[StructType] = {
+    val key = schemaPath(table, id)
+    Option(LakeCatalog.schemas.get(key)).orElse {
+      scala.util.Try(Using.resource(fs.open(new Path(key)))(_.readAllBytes())).toOption
+        .map { bytes =>
+          val schema = org.apache.spark.sql.types.DataType
+            .fromJson(new String(bytes, StandardCharsets.UTF_8)).asInstanceOf[StructType]
+          LakeCatalog.remember(LakeCatalog.schemas, key, schema)
+          schema
+        }
     }
   }
 
@@ -1730,24 +1793,65 @@ final class LakeCatalog(
 
   /** Stats of one committed data dir: (rowCount, col -> (kind, min, max)).
     * None when the commit predates stats collection (then nothing prunes).
+    * Only the `rows` and `col` lines count here; the commit-record lines
+    * (`schema`, `file` — see [[writeStats]]) and any line kind a later
+    * writer adds are skipped, so sidecars with and without a record read
+    * the same.
     */
   def commitStats(ns: String, t: String, rel: String):
-      Option[(Long, Map[String, (String, String, String)])] = {
-    val p = statsFile(ns, t, rel)
-    if (!fs.exists(p)) return None
-    val text = new String(
-      Using.resource(fs.open(p))(_.readAllBytes()), StandardCharsets.UTF_8)
-    var rows = 0L
-    val cols = scala.collection.mutable.Map[String, (String, String, String)]()
-    text.split("\n").foreach { line =>
-      line.split("\t") match {
-        case Array("rows", n) => rows = n.toLong
-        case Array("col", name, kind, mn, mx) =>
-          cols(dec(name)) = (kind, dec(mn), dec(mx))
-        case _ => ()
+      Option[(Long, Map[String, (String, String, String)])] =
+    sidecar(tableUri(ns, t), rel).map(sc => (sc.rows, sc.cols))
+
+  /** The dir's commit record ([[writeStats]]), None when it has none or
+    * its schema file is unreadable — then the dir reads by listing.
+    */
+  private[lake] def commitRecord(ns: String, t: String, rel: String): Option[CommitRecord] =
+    sidecar(tableUri(ns, t), rel).flatMap(_.record)
+
+  /** The parsed sidecar of commit dir `rel` of the table at URI `table`.
+    * Memoized process-wide by the dir's URI: commit dirs are immutable
+    * once committed (rewrites mint fresh uuid dirs, vacuum only deletes),
+    * so every catalog instance — the SQL façade builds one per statement
+    * — shares one parse. A missing sidecar is not memoized. The record's
+    * file statuses are qualified under the table URI, so object-store
+    * tables scan where they live.
+    */
+  private def sidecar(table: String, rel: String): Option[Sidecar] = {
+    val dir = s"$table/$rel"
+    Option(LakeCatalog.sidecars.get(dir)).orElse {
+      val bytes =
+        try Some(Using.resource(fs.open(new Path(dir, "_graft_stats.tsv")))(_.readAllBytes()))
+        catch { case _: java.io.FileNotFoundException => None }
+      bytes.map { b =>
+        var rows = 0L
+        val cols = scala.collection.mutable.Map[String, (String, String, String)]()
+        var schemaId: Option[String] = None
+        var suffix = ""
+        val files = Vector.newBuilder[ParquetFooterStats.FileFooter]
+        new String(b, StandardCharsets.UTF_8).split("\n").foreach { line =>
+          line.split("\t") match {
+            case Array("rows", n) => rows = n.toLong
+            case Array("col", name, kind, mn, mx) =>
+              cols(dec(name)) = (kind, dec(mn), dec(mx))
+            case Array("schema", id) => schemaId = Some(id)
+            case Array("suffix", tail) => suffix = dec(tail)
+            case Array("file", name, bytes, n, mtime) =>
+              files += ParquetFooterStats.FileFooter(dec(name), bytes.toLong, n.toLong, mtime.toLong)
+            case _ => ()
+          }
+        }
+        val recorded = files.result().map(f => f.copy(name = f.name + suffix))
+        val dirPath = new Path(dir)
+        val record = for {
+          id <- schemaId if recorded.nonEmpty
+          schema <- schemaOf(table, id)
+        } yield CommitRecord(id, schema, recorded, recorded.map(f =>
+          new FileStatus(f.bytes, false, 1, 0L, f.mtime, new Path(dirPath, f.name))))
+        val sc = Sidecar(rows, cols.toMap, record)
+        LakeCatalog.remember(LakeCatalog.sidecars, dir, sc)
+        sc
       }
     }
-    Some((rows, cols.toMap))
   }
 
   /** True when the commit's recorded [min, max] of `column` could
@@ -1944,6 +2048,32 @@ final class LakeCatalog(
 }
 
 object LakeCatalog {
+
+  /** A flat commit dir's record: the schema its files share (and its
+    * id), and every parquet file with its size, row count and mtime —
+    * also as the qualified statuses a scan takes.
+    */
+  private[lake] final case class CommitRecord(schemaId: String, schema: StructType,
+      files: Seq[ParquetFooterStats.FileFooter], statuses: Seq[FileStatus])
+
+  private final case class Sidecar(rows: Long,
+      cols: Map[String, (String, String, String)], record: Option[CommitRecord])
+
+  // process-wide memos of immutable lake metadata, keyed by qualified URI
+  private val sidecars = new java.util.concurrent.ConcurrentHashMap[String, Sidecar]()
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** Memo insert with a crude bound: a process that has seen more commit
+    * dirs than this starts over rather than growing without limit.
+    */
+  private def remember[V](memo: java.util.concurrent.ConcurrentHashMap[String, V],
+      key: String, value: V): Unit = {
+    if (memo.size >= 65536) memo.clear()
+    memo.put(key, value)
+    ()
+  }
+
+  private val ManifestName = """v(\d+)\.txt""".r
 
   private val TsKey = "spark.sql.parquet.outputTimestampType"
   // session -> (nesting depth, conf value before the first writer entered)

@@ -6,11 +6,13 @@ import java.time.format.DateTimeFormatter
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.parquet.schema.LogicalTypeAnnotation._
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.sql.types.StructType
 
 /** Commit statistics from parquet FOOTERS — zero data scan. The write path
   * already paid for footer min/max/rowcount when it wrote the files;
@@ -31,18 +33,32 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
   */
 private[graft] object ParquetFooterStats {
 
-  /** (rowCount, col -> (kind, minString, maxString)) for one commit dir,
-    * or None when footers can't provide scan-equivalent stats.
+  /** One data file of a commit as its footer describes it. */
+  final case class FileFooter(name: String, bytes: Long, rows: Long, mtime: Long)
+
+  /** What one flat commit dir's footers prove: its exact row count, the
+    * per-column (kind, minString, maxString) stats, every data file with
+    * its size and row count, and the Spark schema all files share (None
+    * when `schemaOf` cannot name one for some file, or the files differ).
     */
-  def forDir(fs: FileSystem, conf: Configuration, dir: Path,
-      sessionTz: String): Option[(Long, Seq[(String, (String, String, String))])] = {
+  final case class DirFooters(rows: Long, cols: Seq[(String, (String, String, String))],
+      files: Seq[FileFooter], schema: Option[StructType])
+
+  /** Footer facts of one commit dir, or None when footers can't provide
+    * scan-equivalent stats. `schemaOf` names the Spark schema a file's
+    * footer declares (None: unknown).
+    */
+  def forDir(fs: FileSystem, conf: Configuration, dir: Path, sessionTz: String,
+      schemaOf: (Path, ParquetMetadata) => Option[StructType] = (_, _) => None): Option[DirFooters] = {
     if (!fs.exists(dir)) return None
     val entries = fs.listStatus(dir)
     // hive-style partitioned commits keep values in dir names, not footers
     if (entries.exists(_.isDirectory)) return None
-    val parts = entries.filter(_.isFile).map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_") &&
-        !p.getName.startsWith("."))
+    val parts = entries.filter(_.isFile)
+      .filter { st =>
+        val n = st.getPath.getName
+        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+      }
     if (parts.isEmpty) return None
 
     // One footer read per file, run CONCURRENTLY (r17, guide §5 — the
@@ -58,15 +74,16 @@ private[graft] object ParquetFooterStats {
     import scala.concurrent.duration.DurationInt
     import scala.jdk.CollectionConverters._
     implicit val ec: ExecutionContext = ExecutionContext.global
-    final case class PartStats(rows: Long,
+    final case class PartStats(file: FileFooter, schema: Option[StructType],
         cols: Seq[(String, (String, String, String))], unsupported: Set[String])
     val perPart: Seq[PartStats] = Await.result(
-      Future.sequence(parts.toList.map { part =>
+      Future.sequence(parts.toList.map { st =>
         Future {
+          val part = st.getPath
           var rows = 0L
           val acc = scala.collection.mutable.LinkedHashMap[String, (String, String, String)]()
           val unsupported = scala.collection.mutable.Set[String]()
-          val reader = ParquetFileReader.open(HadoopInputFile.fromPath(part, conf))
+          val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
           try {
             val footer = reader.getFooter
             for (block <- footer.getBlocks.asScala) {
@@ -104,15 +121,16 @@ private[graft] object ParquetFooterStats {
                 }
               }
             }
+            PartStats(FileFooter(part.getName, st.getLen, rows, st.getModificationTime),
+              schemaOf(part, footer), acc.toSeq, unsupported.toSet)
           } finally reader.close()
-          PartStats(rows, acc.toSeq, unsupported.toSet)
         }
       }), 10.minutes)
     var rows = 0L
     val acc = scala.collection.mutable.LinkedHashMap[String, (String, String, String)]()
     val unsupported = scala.collection.mutable.Set[String]()
     for (ps <- perPart) {
-      rows += ps.rows
+      rows += ps.file.rows
       unsupported ++= ps.unsupported
       for ((colPath, (kind, mn, mx)) <- ps.cols if !unsupported.contains(colPath)) {
         acc.get(colPath) match {
@@ -124,7 +142,9 @@ private[graft] object ParquetFooterStats {
       }
     }
     unsupported.foreach(acc.remove)
-    Some((rows, acc.toSeq))
+    val schemas = perPart.map(_.schema).distinct
+    Some(DirFooters(rows, acc.toSeq, perPart.map(_.file),
+      if (schemas.length == 1) schemas.head else None))
   }
 
   // str bounds combine in unsigned UTF-8 byte order — the same order the

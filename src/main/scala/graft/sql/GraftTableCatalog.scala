@@ -215,8 +215,8 @@ final case class GraftTable(
 
   /** The real read plan this marker stands for — built ONCE per marker
     * (loadTable's schema() and the resolution rule's swap share it; the
-    * multi-commit plan construction costs manifest reads + scan-group
-    * probes, and a self-join statement would otherwise pay it four times).
+    * multi-commit plan construction costs manifest and commit-record
+    * reads, and a self-join statement would otherwise pay it four times).
     */
   private lazy val realRead: org.apache.spark.sql.DataFrame =
     (pinnedVersion, asOfMs) match {

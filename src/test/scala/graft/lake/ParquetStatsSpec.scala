@@ -56,8 +56,20 @@ class ParquetStatsSpec extends SparkSpec {
         lines += s"col\t${enc(f.name)}\t${if (numeric) "num" else "str"}\t${enc(mn.toString)}\t${enc(mx.toString)}"
       }
     }
-    assert(new String(footerBytes, "UTF-8") == lines.mkString("\n"),
-      s"footer sidecar diverges from scan sidecar:\n--- footer ---\n${new String(footerBytes, "UTF-8")}\n--- scan ---\n${lines.mkString("\n")}")
+    // the footer sidecar is the stats lines, then the commit record
+    // (`schema` + one `file` line per data file), which the scan-derived
+    // sidecar never carried
+    val (statLines, record) = new String(footerBytes, "UTF-8").split("\n").toSeq
+      .span(l => !l.startsWith("schema\t"))
+    assert(statLines.mkString("\n") == lines.mkString("\n"),
+      s"footer sidecar diverges from scan sidecar:\n--- footer ---\n${statLines.mkString("\n")}\n--- scan ---\n${lines.mkString("\n")}")
+    val dir = java.nio.file.Paths.get(cat.root, "ns", "m", rels.head).toFile
+    val files = dir.listFiles().filter(f => f.getName.endsWith(".parquet") &&
+      !f.getName.startsWith(".")).map(f => (f.getName, f.length())).toSet
+    assert(record.head.matches("schema\t[0-9a-f]{16}"), record.head)
+    val recorded = cat.commitRecord("ns", "m", rels.head).get.files
+    assert(recorded.map(f => (f.name, f.bytes)).toSet == files)
+    assert(recorded.map(_.rows).sum == row.getLong(0))
   }
 
   test("readWhere prunes identically over footer-derived stats") {
