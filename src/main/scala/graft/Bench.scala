@@ -3,14 +3,18 @@ package graft
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line for the driver (BENCH_r{N}.json).
   *
-  * Queries run grouped by operator family (ann_*, dedup_*, ingest_*, lake_*,
-  * mm_*, pipeline_*, q*, text_*), and all memoized state — persisted
-  * signature frames, parse caches, localCheckpoint blocks — is released at
-  * every family boundary (GraftSession.releaseCaches). A single long-lived
-  * JVM otherwise accumulates every family's pinned storage, and on a
-  * memory-constrained driver that pressure shows up as multi-x slowdowns in
-  * the families that run last (observed in round 2: q_asof_join 1.2s ->
-  * 18.9s with an unchanged plan; a clean JVM reproduces the 1.2s).
+  * Every entry builds what it reads on each call — no registered query
+  * shares a memoized build with another — so each stamp is the entry's
+  * own end-to-end cost. After every timed pass, untimed, the session
+  * state the pass left behind is released (GraftSession.releaseCaches)
+  * and its dirty pages are flushed (GraftSession.syncBarrier). Release is
+  * per PASS, not per entry: Spark's CacheManager would otherwise serve a
+  * repeat pass the previous pass's plan-equal persist. A single
+  * long-lived JVM otherwise accumulates every entry's pinned storage, and
+  * on a memory-constrained driver that pressure shows up as multi-x
+  * slowdowns in the entries that run last (observed in round 2:
+  * q_asof_join 1.2s -> 18.9s with an unchanged plan; a clean JVM
+  * reproduces the 1.2s).
   */
 object Bench {
 
@@ -69,7 +73,7 @@ object Bench {
     // fresh JVM (VERDICT r12 #2): after ~150 prior entries, the parent
     // JVM's accumulated footprint inflated the state-store-heavy stream
     // family ~1.5-1.8x over its solo medians on two different boxes, and
-    // no drain (quiesce, state-store unload, terminated-handle reset)
+    // no drain (cleaner drain, state-store unload, terminated-handle reset)
     // returns it to baseline — the canary shows the slowdown is ambient
     // to the aged JVM, not attributable to any single predecessor. A solo
     // child JVM reproduces the solo number by construction; the ~10 s
@@ -77,19 +81,11 @@ object Bench {
     // opts out (e.g. under local-cluster replays).
     val forkStream = args.isEmpty &&
       sys.env.getOrElse("SPARK_GRAFT_FORK_STREAM", "1") != "0"
-    var family: String = null
     // Right(seconds) for a completed query, Left(error) for a failed one —
     // a broken query must surface as "err:<class>" in the JSON, never as a
     // plausible-looking fast timing.
     val results: Seq[(String, Either[String, Double], Double)] =
       selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val f = GraftSession.familyOf(name)
-        // quiesce (release + cleaner drain + sync), not just release: the
-        // boundary is untimed, and at the sf10 soak the async file-delete +
-        // dirty-page writeback residue of a heavy family otherwise inflated
-        // the next family's entries 4-20x over their solo numbers.
-        if (family != null && f != family) GraftSession.quiesce(spark)
-        family = f
         if (forkStream && name.startsWith("stream_")) forkedEntry(name, repeat)
         else {
           def once(): (Either[String, Double], Double) = {
@@ -98,8 +94,10 @@ object Bench {
             val r =
               try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
               catch { case e: Throwable => Left(s"err:${e.getClass.getSimpleName}") }
-            // untimed: flush THIS query's dirty pages now so the next entry
-            // never pays them (per-entry attribution; see syncBarrier docs)
+            // untimed: release what THIS pass left behind and flush its
+            // dirty pages now, so the next pass rebuilds from scratch and
+            // never pays them (per-pass attribution; see syncBarrier docs)
+            GraftSession.releaseCaches(spark)
             GraftSession.syncBarrier()
             (r, c)
           }
@@ -139,10 +137,8 @@ object Bench {
     val errs = results.count(_._2.isLeft)
     val total = results.collect { case (_, Right(v), _) => v }.sum
     // repeat mode must be VISIBLE in the record: a median-of-N run is not
-    // interchangeable with a single pass (repeats re-enter a warm family —
-    // entries backed by family-shared caches, e.g. the dedup pair frame or
-    // the memoized CDC scenario, report their MARGINAL warm cost under
-    // repeat>1, while repeat=1 charges the family build to its first entry)
+    // interchangeable with a single pass (a median damps host noise that a
+    // single pass ships as-is)
     val repeatField = if (repeat > 1) s""","repeat":$repeat""" else ""
     // SLIM stdout line for full-surface runs (r17, VERDICT r16 #2): the
     // per-entry canaries map doubled the line past the driver's tail
@@ -159,13 +155,14 @@ object Bench {
     // which loses half the per-query timings; persist the COMPLETE sorted
     // JSON (canaries included) to a file as well (full CLEAN runs only — a
     // subset run or one with errors must not replace the round's last good
-    // record). Written BEFORE the println so the one-line JSON stays the
-    // LAST stdout line no matter what.
+    // record). One file per CPU count, so an 8-core run cannot overwrite a
+    // 32-core run's per-entry canaries. Written BEFORE the println so the
+    // one-line JSON stays the LAST stdout line no matter what.
     if (args.isEmpty && errs == 0) {
       val full =
         s"""{"metric":"total","value":$total,"unit":"sec","errors":$errs$repeatField,"canary_best":$canaryBest,"canaries":$canaries,"queries":$qs,"sf":"$sfDir"}"""
       val out = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH-full-latest.json"))
+        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH-full-c${GraftSession.cpus}.json"))
       java.nio.file.Files.write(out,
         (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
@@ -227,10 +224,7 @@ private[graft] final class BenchCanary(spark: org.apache.spark.sql.SparkSession)
   import org.apache.spark.sql.functions._
 
   private val path: String = {
-    val user = sys.props.getOrElse("user.name", "unknown")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val p = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_scratch_$user", "bench_canary_v1")
+    val p = graft.operators.IngestLake.localScratchRoot.resolve("bench_canary_v1")
     if (!java.nio.file.Files.exists(p.resolve("_SUCCESS")))
       spark.range(0, 3L * 1000 * 1000, 1, 8)
         .select(col("id"), md5(col("id").cast("string")).as("pad"))

@@ -108,38 +108,25 @@ object GraftSession {
     spark
   }
 
-  /** Release every piece of memoized per-query-family state: the dedup
-    * signature/cluster caches, any session-cached frames (SimHash signature
-    * pins, corrupt-record parse caches), and — via the ContextCleaner once
-    * the references are gone — localCheckpoint blocks.
+  /** Release every piece of session state a finished query leaves behind:
+    * session-cached frames (the dedup signature/pair persists, SimHash
+    * signature pins, corrupt-record parse caches), dead per-invocation
+    * scratch, terminated stream handles, state-store providers and — via
+    * the ContextCleaner once the references are gone — localCheckpoint
+    * blocks.
     *
     * Long-lived sessions (Bench, Verify, a production notebook running the
-    * full surface) call this between operator families; without it the JVM
-    * accumulates every family's pinned storage for the whole run, and on a
-    * small-heap driver that pressure surfaces as multi-x slowdowns in
-    * whatever queries happen to run AFTER the caching families (the
+    * full surface) call this between queries, never while one is running;
+    * without it the JVM accumulates every query's pinned storage for the
+    * whole run, and on a small-heap driver that pressure surfaces as
+    * multi-x slowdowns in whatever queries happen to run later (the
     * round-2 bench regressions: q_asof_join 1.2s -> 18.9s with identical
     * code and an identical plan).
     */
-  /** family key for cache-release grouping: leading query-name segment with
-    * trailing digits stripped, so q1/q3/q22/q_asof all land in one "q"
-    * family. Shared by Bench and Verify so both release at the SAME
-    * boundaries.
-    */
-  def familyOf(name: String): String =
-    // each stream twin is its OWN family: both replay a full table through
-    // a stateful streaming operator and leave the memory sink + state
-    // store providers behind until release — measured r5-driver effect of
-    // sharing one family: stream_neardup_twin doubled (8.1 s -> 15.9 s)
-    // once stream_buckets_twin started running right before it
-    if (name.startsWith("stream_")) name
-    else name.split("_")(0).replaceAll("\\d+$", "")
-
   def releaseCaches(spark: SparkSession): Unit = {
-    graft.operators.Dedup.clearCache(spark)
-    // dead per-invocation scratch (lake warehouses, roundtrip files) goes
-    // with the caches: at the sf10 soak a full Verify pass otherwise
-    // accumulates 56 GB of write-once scratch and fills the device
+    // dead per-invocation scratch (lake warehouses, roundtrip files): at
+    // the sf10 soak a full Verify pass otherwise accumulates 56 GB of
+    // write-once scratch and fills the device
     graft.operators.IngestLake.reclaimScratch()
     spark.catalog.clearCache()
     // Terminated StreamingQuery handles stay registered with the query
@@ -148,43 +135,19 @@ object GraftSession {
     // progress buffers). A session replaying many twins accumulates every
     // twin's last micro-batch that way (r12 VERDICT #2: stream entries
     // measured ~1.8x their solo medians by the time six predecessors had
-    // run). Family boundaries never have an active query, so dropping the
+    // run). Callers never have an active query here, so dropping the
     // terminated set is safe.
     spark.streams.resetTerminated()
     // Stateful streaming twins leave their state-store providers (and the
     // providers' in-memory version maps) cached after the query completes;
     // at the sf10 soak those maps held GBs and starved later aggregations
-    // into AGGREGATE_OUT_OF_MEMORY. Family boundaries never have an active
-    // streaming query, so unloading is safe (providers reload lazily).
+    // into AGGREGATE_OUT_OF_MEMORY. With no active streaming query,
+    // unloading is safe (providers reload lazily).
     org.apache.spark.sql.GraftBridge.unloadStateStores()
     // Drop references held by the periodic GC-based ContextCleaner so
     // localCheckpoint RDD blocks are actually evicted before the next
-    // family is timed, not at some later GC.
+    // query is timed, not at some later GC.
     System.gc()
-  }
-
-  /** Benchmark-boundary quiesce: [[releaseCaches]] drops the REFERENCES,
-    * but the ContextCleaner deletes the underlying shuffle/checkpoint
-    * files asynchronously and the OS writes dirty pages back lazily — so
-    * a heavy family's IO residue lands inside the NEXT family's timings.
-    * Measured at the r11 sf10 soak: the ingest family right after
-    * ann+dedup ran 4-20x over its solo numbers (ingest_json_props 92.5 s
-    * in-run vs 4.6 s solo), while the same family alone, or after just
-    * one dedup query, ran at full speed — the slowdown scales with the
-    * accumulated un-flushed residue, not with any single predecessor.
-    *
-    * Called by Bench BETWEEN timed families only (boundary time is not
-    * charged to any query); never on a query path. The sleeps give the
-    * GC-driven cleaner thread a chance to drain its reference queue and
-    * issue the file deletes; `sync` then forces the dirty-page writeback
-    * to happen HERE rather than under the next family's timer.
-    */
-  def quiesce(spark: SparkSession): Unit = {
-    releaseCaches(spark)
-    Thread.sleep(1500)
-    System.gc() // second pass: objects promoted/resurrected by the first
-    Thread.sleep(500)
-    syncBarrier()
   }
 
   /** Flush dirty pages to the device, OUTSIDE any query timer. The r11

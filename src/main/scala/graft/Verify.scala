@@ -5,7 +5,10 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * plus oracle_sql.json, for the DuckDB oracle compare. Every entry
+  * builds what it reads on each call, and the session state it leaves
+  * behind is released after it is written (GraftSession.releaseCaches) —
+  * the same per-entry contract Bench times under.
   */
 object Verify {
 
@@ -43,18 +46,11 @@ object Verify {
       queries: Map[String, (SparkSession, String) => DataFrame],
       only: Set[String] = Set.empty): Map[String, String] = {
     new java.io.File(outDir).mkdirs()
-    // run in family order and release memoized state at family boundaries,
-    // exactly like Bench — a 140-query session should not accumulate every
-    // family's pinned storage (see GraftSession.releaseCaches).
-    var family: String = null
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     try {
       queries.toSeq.sortBy(_._1)
         .filter(kv => only.isEmpty || only.contains(kv._1))
         .foreach { case (name, fn) =>
-          val f = GraftSession.familyOf(name)
-          if (family != null && f != family) GraftSession.releaseCaches(spark)
-          family = f
           try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           catch { case e: Throwable =>
@@ -72,6 +68,9 @@ object Verify {
               System.err.println(s"[verify] $name err-marker write failed: ${m.getMessage}")
             }
           }
+          // a 173-query session must not accumulate every entry's pinned
+          // storage and scratch (see GraftSession.releaseCaches)
+          GraftSession.releaseCaches(spark)
         }
     } finally {
       val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }

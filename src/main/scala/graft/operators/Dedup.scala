@@ -297,92 +297,46 @@ object Dedup {
       .select(col("a"), col("b"), estJaccard(col("sig_a"), col("sig_b")).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
 
-  // Memoized per (sessionUUID, dir): four registered queries build on the
-  // same candidate-pair frame, so one persisted signature frame serves all
-  // of them in a Verify/Bench session instead of four separate caches.
-  // sessionUUID keying (vs identityHashCode) cannot collide across a GC'd
-  // session's address reuse; entries bound to stopped sessions are evicted
-  // on the next lookup, and clearCache(session) unpersists explicitly for
-  // long-lived sessions.
-  private final case class CachedPipeline(
-      signatures: DataFrame, slimPairs: DataFrame)
-  private val pipelineCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), CachedPipeline]()
-
-  private def sessionUUID(s: SparkSession): String =
-    org.apache.spark.sql.GraftBridge.sessionUUID(s)
-
-  private def cachedPipeline(s: SparkSession, dir: String): CachedPipeline = {
-    pipelineCache.entrySet().removeIf(e =>
-      e.getValue.signatures.sparkSession.sparkContext.isStopped)
-    pipelineCache.computeIfAbsent((sessionUUID(s), dir), _ => {
-      val signed =
-        signedFrame(withPlantedDups(Tables(s, dir).documents), "doc_id", "text").persist()
-      // Every pipeline consumer starts from (a, b[, est_jaccard]) — a
-      // ~24 B/row projection of the LSH self-join. Two deliberate shuffle
-      // economies here: (1) the estimate joins attach ONLY the 64-long
-      // minhash signature, never the (larger, variable-size) shingle-hash
-      // sets — those ride a separate narrow join in the one consumer that
-      // needs them (ngram's exact-Jaccard verify, which also explains why
-      // this frame is UNFILTERED: that verify filters on exact Jaccard,
-      // not the estimate); (2) the result is persisted, making the join a
-      // once-per-corpus cost instead of once per consumer — at 100 TB this
-      // is the stage boundary a production pipeline checkpoints anyway.
-      val banded = signed.withColumn("bands", bandKeys(col("sig")))
-      val sigOnly = signed.select(col("id"), col("sig"))
-      val slim = candidatePairs(banded.select("id", "bands"))
-        .join(sigOnly.select(col("id").as("a"), col("sig").as("sig_a")), "a")
-        .join(sigOnly.select(col("id").as("b"), col("sig").as("sig_b")), "b")
-        .select(col("a"), col("b"),
-          estJaccard(col("sig_a"), col("sig_b")).as("est_jaccard"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      CachedPipeline(signed, slim)
-    })
-  }
-
-  /** (a, b, est_jaccard) for EVERY LSH candidate pair (no threshold) —
-    * persisted once per (session, corpus). */
-  private def slimPairsFor(s: SparkSession, dir: String): DataFrame =
-    cachedPipeline(s, dir).slimPairs
-
-  // Memoized clusters: dedup_clusters and dedup_survivors both need the
-  // connected components of the same near-dup pair graph; one CC run (an
-  // iterative multi-job computation) serves both. The result is a
-  // localCheckpointed frame, so caching the reference costs nothing.
-  private val clustersCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  private def clustersFor(s: SparkSession, dir: String): DataFrame = {
-    clustersCache.entrySet().removeIf(e =>
-      e.getValue.sparkSession.sparkContext.isStopped)
-    clustersCache.computeIfAbsent((sessionUUID(s), dir), _ =>
-      duplicateClusters(slimPairsFor(s, dir)
-        .filter(col("est_jaccard") >= 0.5)
-        .select(col("a"), col("b"), col("est_jaccard").as("ej"))))
-  }
-
-  /** Unpersist and evict this session's memoized signature frames — call
-    * when a long-lived session finishes its dedup stage.
+  /** The registered entries' shared MinHash stages over the planted-dup
+    * corpus: the persisted signature frame and the persisted, UNFILTERED
+    * (a, b, est_jaccard) frame of every LSH candidate pair. Built on every
+    * call; the persists are stage boundaries inside ONE query.
     */
-  def clearCache(s: SparkSession): Unit = {
-    clustersCache.keySet().removeIf(_._1 == sessionUUID(s))
-    val it = pipelineCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == sessionUUID(s)) {
-        try e.getValue.signatures.unpersist()
-        catch { case _: Throwable => () }
-        try e.getValue.slimPairs.unpersist()
-        catch { case _: Throwable => () }
-        it.remove()
-      }
-    }
+  private final case class Pipeline(signatures: DataFrame, slimPairs: DataFrame)
+
+  private def pipeline(s: SparkSession, dir: String): Pipeline = {
+    val signed =
+      signedFrame(withPlantedDups(Tables(s, dir).documents), "doc_id", "text").persist()
+    // Every pipeline consumer starts from (a, b[, est_jaccard]) — a
+    // ~24 B/row projection of the LSH self-join. The estimate joins attach
+    // ONLY the 64-long minhash signature, never the (larger, variable-size)
+    // shingle-hash sets — those ride a separate narrow join in the one
+    // consumer that needs them (ngram's exact-Jaccard verify, which also
+    // explains why this frame is UNFILTERED: that verify filters on exact
+    // Jaccard, not the estimate).
+    val banded = signed.withColumn("bands", bandKeys(col("sig")))
+    val sigOnly = signed.select(col("id"), col("sig"))
+    val slim = candidatePairs(banded.select("id", "bands"))
+      .join(sigOnly.select(col("id").as("a"), col("sig").as("sig_a")), "a")
+      .join(sigOnly.select(col("id").as("b"), col("sig").as("sig_b")), "b")
+      .select(col("a"), col("b"),
+        estJaccard(col("sig_a"), col("sig_b")).as("est_jaccard"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Pipeline(signed, slim)
   }
+
+  /** (a, b, est_jaccard) for the LSH candidate pairs at the 0.5 estimate. */
+  private def estimatedPairs(s: SparkSession, dir: String): DataFrame =
+    pipeline(s, dir).slimPairs.filter(col("est_jaccard") >= 0.5)
+
+  /** Connected components of the near-dup pair graph (localCheckpointed). */
+  private def clusters(s: SparkSession, dir: String): DataFrame =
+    duplicateClusters(estimatedPairs(s, dir)
+      .select(col("a"), col("b"), col("est_jaccard").as("ej")))
 
   val dedupMinhash: Q = Q(
     "dedup_minhash",
-    (s, dir) => slimPairsFor(s, dir)
-      .filter(col("est_jaccard") >= 0.5).orderBy("a", "b"),
+    (s, dir) => estimatedPairs(s, dir).orderBy("a", "b"),
     // Bit-exact DuckDB twin of the FULL MinHash pipeline — FNV-1a shingle
     // hashes, 64 mix64 permutations, xxhash64 band keys, capped buckets —
     // re-expressed in HUGEINT mod-2^64 arithmetic (generated by
@@ -397,8 +351,8 @@ object Dedup {
       // signature frame — two narrow hash joins instead of re-running the
       // LSH bucket self-join (the only consumer that needs the shingle
       // sets, for the EXACT-Jaccard verify; the estimate filter does not
-      // apply here, which is why the slim cache is unfiltered)
-      val p = cachedPipeline(s, dir)
+      // apply here, which is why the slim frame is unfiltered)
+      val p = pipeline(s, dir)
       p.slimPairs.select("a", "b")
         .join(p.signatures.select(col("id").as("a"), col("hashes").as("h_a")), "a")
         .join(p.signatures.select(col("id").as("b"), col("hashes").as("h_b")), "b")
@@ -547,7 +501,7 @@ object Dedup {
     */
   val dedupClusters: Q = Q(
     "dedup_clusters",
-    (s, dir) => clustersFor(s, dir).orderBy("id"),
+    (s, dir) => clusters(s, dir).orderBy("id"),
     // Generated prelude + WITH RECURSIVE transitive closure: DuckDB computes
     // the true connected components, so this oracle also proves the
     // iterative min-label propagation converged.
@@ -560,7 +514,7 @@ object Dedup {
   val dedupSurvivors: Q = Q(
     "dedup_survivors",
     (s, dir) => {
-      val dropList = clustersFor(s, dir)
+      val dropList = clusters(s, dir)
         .filter(col("id") =!= col("cluster_id")) // keep canonical members
         .select(col("id").as("doc_id"))
       withPlantedDups(Tables(s, dir).documents)
@@ -584,8 +538,7 @@ object Dedup {
     "dedup_levenshtein",
     (s, dir) => {
       val docs = withPlantedDups(Tables(s, dir).documents)
-      val pairs = slimPairsFor(s, dir)
-        .filter(col("est_jaccard") >= 0.5).select("a", "b")
+      val pairs = estimatedPairs(s, dir).select("a", "b")
       pairs
         .join(docs.select(col("doc_id").as("a"), col("text").as("text_a")), "a")
         .join(docs.select(col("doc_id").as("b"), col("text").as("text_b")), "b")

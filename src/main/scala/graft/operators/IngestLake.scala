@@ -21,24 +21,26 @@ object IngestLake {
 
   private val D = "DECIMAL(12,2)"
 
+  /** The user-scoped local scratch root, `<tmpdir>/graft_scratch_<user>`:
+    * a world-shared tmpdir subpath could be squatted by another local
+    * user. Every local scratch consumer (per-invocation dirs, the IVF
+    * index, the wide CSV corpus, the bench canary) lives under it.
+    */
+  private[graft] def localScratchRoot: java.nio.file.Path = {
+    val user = sys.props.getOrElse("user.name", "unknown")
+      .replaceAll("[^A-Za-z0-9._-]", "_")
+    Paths.get(sys.props("java.io.tmpdir"), s"graft_scratch_$user")
+  }
+
   /** fresh scratch dir per invocation — lake ops are stateful, so reruns
-    * must not see previous snapshots. User-scoped root (same reasoning as
-    * the IVF scratch: a world-shared tmpdir subpath can be squatted by
-    * another local user).
+    * must not see previous snapshots.
     */
   private def scratch(name: String): String =
     sys.props.get(ScratchRootProp) match {
       case Some(root) => // scheme-qualified root (e.g. graftoss://bucket/x):
         // the owning FileSystem creates dirs on write; nothing local to make
         s"${root.stripSuffix("/")}/$name/${java.util.UUID.randomUUID().toString}"
-      case None =>
-        val user = sys.props.getOrElse("user.name", "unknown")
-          .replaceAll("[^A-Za-z0-9._-]", "_")
-        val p = Paths.get(sys.props("java.io.tmpdir"), s"graft_scratch_$user", name,
-          java.util.UUID.randomUUID().toString)
-        Files.createDirectories(p)
-        liveScratch.add(p)
-        p.toString
+      case None => scratchLocal(name)
     }
 
   /** Per-invocation local scratch dirs allocated by this JVM and not yet
@@ -46,21 +48,17 @@ object IngestLake {
     * their query materializes — but "never revisited" used to also mean
     * "never deleted": a full Verify pass at the sf10 soak accumulated
     * 56 GB of dead scratch and filled the device mid-sequence. Reclaimed
-    * wholesale at family boundaries via [[reclaimScratch]]. The IVF
-    * centroid cache (Similarity.scala) is digest-keyed and deliberately
-    * reused across runs, so it does NOT register here.
+    * via [[reclaimScratch]]. The IVF index (Similarity.scala), the wide
+    * CSV corpus and the bench canary are deliberately reused across runs,
+    * so they do NOT register here.
     */
   private val liveScratch =
     java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
 
   /** Delete every registered scratch dir. Callers must guarantee no query
-    * is mid-flight: GraftSession.releaseCaches invokes this at
-    * Bench/Verify family boundaries only, where every allocating query
-    * has fully materialized its result. The memoized CDC scenario is
-    * EXEMPT (the IVF-centroid-cache treatment): its dir is not registered
-    * here and the cache survives the boundary — clearing it made whatever
-    * query touched the scenario first each family pass pay the 4-write
-    * rebuild (driver-stamped lake_changelog 11.8 s vs 0.73 s warm).
+    * is mid-flight: GraftSession.releaseCaches invokes this after each
+    * Bench pass and Verify entry, once the entry's result has fully
+    * materialized.
     */
   def reclaimScratch(): Unit = {
     val it = liveScratch.iterator()
@@ -91,10 +89,7 @@ object IngestLake {
     * the warehouse is (the embedded Derby database directory).
     */
   private def scratchLocal(name: String): String = {
-    val user = sys.props.getOrElse("user.name", "unknown")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val p = Paths.get(sys.props("java.io.tmpdir"), s"graft_scratch_$user", name,
-      java.util.UUID.randomUUID().toString)
+    val p = localScratchRoot.resolve(name).resolve(java.util.UUID.randomUUID().toString)
     Files.createDirectories(p)
     liveScratch.add(p)
     p.toString
@@ -260,86 +255,22 @@ object IngestLake {
     Some("SELECT * FROM nation ORDER BY n_nationkey")
   )
 
-  // Shared CDC scenario, memoized per (session, sf-dir, scratch root):
-  // three registered queries (merge_upsert / changelog / incremental_read)
-  // exercise three DIFFERENT APIs over the same seeded two-version table,
-  // so one build (CTAS + MERGE, four writes) serves all of them in a
-  // Verify/Bench session. First caller pays the build, like the dedup
-  // signature cache — and, unlike the rest of the scratch, the scenario
-  // SURVIVES family-boundary reclamation (it is the one scratch consumer
-  // re-read across families; see [[reclaimScratch]]). Its dirs are
-  // deleted when their session stops (eviction) or at JVM exit.
-  private val cdcCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String),
-      (org.apache.spark.sql.SparkSession, Option[java.nio.file.Path], LakeCatalog)]()
-
-  /** like [[scratch]] but NOT registered for family-boundary reclamation —
-    * for the memoized CDC scenario only. Returns (warehouse location,
-    * local path to delete on eviction/exit — None for scheme-qualified
-    * roots, whose stores manage their own lifecycle).
+  /** The two-version table the CDC trio (merge_upsert / changelog /
+    * incremental_read) reads through three different APIs: v1 = CTAS of
+    * the even orders, v2 = MERGE upsert of every 3rd order at +1000.
+    * Built on fresh scratch by every call.
     */
-  private def scratchPersistent(name: String): (String, Option[java.nio.file.Path]) =
-    sys.props.get(ScratchRootProp) match {
-      case Some(root) =>
-        (s"${root.stripSuffix("/")}/$name/${java.util.UUID.randomUUID().toString}", None)
-      case None =>
-        val user = sys.props.getOrElse("user.name", "unknown")
-          .replaceAll("[^A-Za-z0-9._-]", "_")
-        val p = Paths.get(sys.props("java.io.tmpdir"), s"graft_scratch_$user", name,
-          java.util.UUID.randomUUID().toString)
-        Files.createDirectories(p)
-        (p.toString, Some(p))
-    }
-
-  // ONE hook covers every memoized-scenario cache (ADVICE r14: the
-  // sqlSurface cache copied the memoization pattern but its scratch dirs
-  // weren't in the hook, so they leaked on exit unless a dead-session
-  // eviction happened to run first)
-  private lazy val cdcShutdownHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      cdcCache.values().forEach(_._2.foreach(deleteRecQuiet))
-      sqlSurfaceCache.values().forEach(_._2.foreach(deleteRecQuiet))
-    }))
-
-  private def deleteRecQuiet(root: java.nio.file.Path): Unit =
-    try {
-      if (Files.exists(root)) {
-        val walk = Files.walk(root)
-        try walk.sorted(java.util.Comparator.reverseOrder()).forEach { p =>
-          try Files.deleteIfExists(p)
-          catch { case _: java.io.IOException => () }
-        } finally walk.close()
-      }
-    } catch { case _: java.io.IOException => () }
-
   private def cdcScenario(s: org.apache.spark.sql.SparkSession, dir: String): LakeCatalog = {
-    cdcShutdownHook
-    // evict entries bound to stopped sessions (same policy as the dedup
-    // pipeline caches) so long-lived JVMs don't pin dead session state —
-    // and reclaim their persistent scratch dirs with them
-    cdcCache.entrySet().removeIf { e =>
-      val dead = e.getValue._1.sparkContext.isStopped
-      if (dead) e.getValue._2.foreach(deleteRecQuiet)
-      dead
-    }
-    // the scratch root is part of the key: an object-store replay
-    // (graft.scratch.root=graftoss://…) must not be served a memoized
-    // file:// scenario from an earlier local pass
-    val rootProp = sys.props.getOrElse(ScratchRootProp, "")
-    cdcCache.computeIfAbsent(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(s), dir, rootProp), _ => {
-        val (warehouse, localPath) = scratchPersistent("cdc")
-        val t = Tables(s, dir)
-        val cat = LakeCatalog(s, warehouse)
-        val merger = new TableMerger(cat)
-        val base = t.orders.filter(col("o_orderkey") % 2 === 0)
-          .select(col("o_orderkey").as("id"), col("o_totalprice"))
-        merger.mergeTable(base, "lake", "orders_cdc") // v1 (CTAS)
-        val updates = t.orders.filter(col("o_orderkey") % 3 === 0)
-          .select(col("o_orderkey").as("id"), (col("o_totalprice") + 1000).as("o_totalprice"))
-        merger.mergeTable(updates, "lake", "orders_cdc") // v2 (MERGE upsert)
-        (s, localPath, cat)
-      })._3
+    val t = Tables(s, dir)
+    val cat = LakeCatalog(s, scratch("cdc"))
+    val merger = new TableMerger(cat)
+    val base = t.orders.filter(col("o_orderkey") % 2 === 0)
+      .select(col("o_orderkey").as("id"), col("o_totalprice"))
+    merger.mergeTable(base, "lake", "orders_cdc") // v1 (CTAS)
+    val updates = t.orders.filter(col("o_orderkey") % 3 === 0)
+      .select(col("o_orderkey").as("id"), (col("o_totalprice") + 1000).as("o_totalprice"))
+    merger.mergeTable(updates, "lake", "orders_cdc") // v2 (MERGE upsert)
+    cat
   }
 
   val lakeChangelog: Q = Q(
@@ -1599,8 +1530,8 @@ object IngestLake {
   }
 
   /** The wide test CSV corpus, built ONCE per scratch root and reused
-    * across invocations (r17, VERDICT r16 #1) — the [[BenchCanary]] /
-    * cdcScenario treatment applied to the entry's INPUT: the corpus is a
+    * across invocations (r17, VERDICT r16 #1) — the [[BenchCanary]]
+    * treatment applied to the entry's INPUT: the corpus is a
     * deterministic synthetic dataset (v(i,j) = (i+j) % 97, not derived
     * from the benchmark tables), and re-generating its ~650 MB of CSV
     * text inside the timed region both charged corpus construction to
@@ -1612,10 +1543,7 @@ object IngestLake {
     * unchanged and still computes from the CSV bytes every invocation.
     */
   private def wideCsvCorpus(s: org.apache.spark.sql.SparkSession): String = {
-    val user = sys.props.getOrElse("user.name", "unknown")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val p = Paths.get(sys.props("java.io.tmpdir"), s"graft_scratch_$user",
-      "wide_csv_v1", s"${WideRows}x$WideCols")
+    val p = localScratchRoot.resolve("wide_csv_v1").resolve(s"${WideRows}x$WideCols")
     if (!Files.exists(p.resolve("_SUCCESS")))
       writeWideCsv(s, WideRows, WideCols, p.toString)
     p.toString
@@ -1688,49 +1616,34 @@ object IngestLake {
        FROM range($WideCols) j) AS names_md5""")
   )
 
-  // The SQL-façade scenario (CTAS + the reference's literal MERGE), built
-  // ONCE per (session, sf-dir, scratch root) — the cdcScenario treatment
-  // (VERDICT r13 #7: the entry proves the façade's statements, so it
-  // should not re-pay the four-write table construction per invocation).
-  private val sqlSurfaceCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String),
-      (org.apache.spark.sql.SparkSession, Option[java.nio.file.Path], String)]()
-
+  /** The SQL-façade scenario: CTAS + the reference's literal MERGE into
+    * `graft.sqlq.orders` under a fresh scratch warehouse, which is returned.
+    */
   private def sqlSurfaceScenario(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    cdcShutdownHook
-    sqlSurfaceCache.entrySet().removeIf { e =>
-      val dead = e.getValue._1.sparkContext.isStopped
-      if (dead) e.getValue._2.foreach(deleteRecQuiet)
-      dead
-    }
-    val rootProp = sys.props.getOrElse(ScratchRootProp, "")
-    sqlSurfaceCache.computeIfAbsent(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(s), dir, rootProp), _ => {
-        val (warehouse, localPath) = scratchPersistent("sqlsurface")
-        val prev = s.conf.getOption(graft.sql.GraftSqlParser.RootConf)
-        s.conf.set(graft.sql.GraftSqlParser.RootConf, warehouse)
-        try {
-          val t = Tables(s, dir)
-          t.orders.filter(col("o_orderkey") % 2 === 0)
-            .select(col("o_orderkey").as("id"), col("o_totalprice"))
-            .createOrReplaceTempView("sql_base")
-          s.sql("CREATE TABLE graft.sqlq.orders USING iceberg AS SELECT * FROM sql_base")
-            .collect()
-          t.orders.filter(col("o_orderkey") % 3 === 0)
-            .select(col("o_orderkey").as("id"),
-              (col("o_totalprice") + lit(1000)).as("o_totalprice"))
-            .createOrReplaceTempView("sql_delta")
-          // the reference's LITERAL emitted MERGE (merge_utils.py:74-80):
-          // aliases, qualified backticked ON, both WHEN clauses
-          s.sql("""MERGE INTO graft.sqlq.orders t
-            USING sql_delta s
-            ON t.`id` = s.`id`
-            WHEN MATCHED THEN UPDATE SET *
-            WHEN NOT MATCHED THEN INSERT *""").collect()
-        } finally prev.fold(s.conf.unset(graft.sql.GraftSqlParser.RootConf))(
-          s.conf.set(graft.sql.GraftSqlParser.RootConf, _))
-        (s, localPath, warehouse)
-      })._3
+    val warehouse = scratch("sqlsurface")
+    val prev = s.conf.getOption(graft.sql.GraftSqlParser.RootConf)
+    s.conf.set(graft.sql.GraftSqlParser.RootConf, warehouse)
+    try {
+      val t = Tables(s, dir)
+      t.orders.filter(col("o_orderkey") % 2 === 0)
+        .select(col("o_orderkey").as("id"), col("o_totalprice"))
+        .createOrReplaceTempView("sql_base")
+      s.sql("CREATE TABLE graft.sqlq.orders USING iceberg AS SELECT * FROM sql_base")
+        .collect()
+      t.orders.filter(col("o_orderkey") % 3 === 0)
+        .select(col("o_orderkey").as("id"),
+          (col("o_totalprice") + lit(1000)).as("o_totalprice"))
+        .createOrReplaceTempView("sql_delta")
+      // the reference's LITERAL emitted MERGE (merge_utils.py:74-80):
+      // aliases, qualified backticked ON, both WHEN clauses
+      s.sql("""MERGE INTO graft.sqlq.orders t
+        USING sql_delta s
+        ON t.`id` = s.`id`
+        WHEN MATCHED THEN UPDATE SET *
+        WHEN NOT MATCHED THEN INSERT *""").collect()
+    } finally prev.fold(s.conf.unset(graft.sql.GraftSqlParser.RootConf))(
+      s.conf.set(graft.sql.GraftSqlParser.RootConf, _))
+    warehouse
   }
 
   /** The SQL FAÇADE end to end (SURVEY §2 B42; VERDICT r12 #9, r13 #1):
@@ -1740,9 +1653,7 @@ object IngestLake {
     * `graft.<ns>.<table>` names (graft.sql.GraftSqlParser). The scenario
     * is lake_merge_upsert's (base = even orders, corrections = multiples
     * of 3), so the oracle replays the same merge semantics and then diffs
-    * the two versions the way the SQL statement does. The two-version
-    * table is MEMOIZED per session+sf (the cdcScenario pattern); the
-    * benched work is the façade's time-travel read statement.
+    * the two versions the way the SQL statement does.
     */
   val lakeSqlSurface: Q = Q(
     "lake_sql_surface",

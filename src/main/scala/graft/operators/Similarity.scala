@@ -260,12 +260,7 @@ object Similarity {
         // silently loads. Ownership is verified before reuse.
         val base = sys.env.get("GRAFT_SCRATCH")
           .map(java.nio.file.Paths.get(_))
-          .getOrElse {
-            val user = sys.props.getOrElse("user.name", "unknown")
-              .replaceAll("[^A-Za-z0-9._-]", "_")
-            java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-              s"graft_scratch_$user")
-          }
+          .getOrElse(IngestLake.localScratchRoot)
         val root = base.resolve("ivf").resolve(digest)
         java.nio.file.Files.createDirectories(root)
         val owner = java.nio.file.Files.getOwner(root).getName

@@ -132,7 +132,7 @@ object StreamingQueries {
       // (HDFS provider: full version maps — ~6 GB for the sf10 near-dup
       // replay; RocksDB provider: native block cache). The caller's next
       // step is a BATCH stage over the sink output; release the state
-      // memory before it runs rather than at the next family boundary.
+      // memory before it runs rather than at the next releaseCaches.
       org.apache.spark.sql.GraftBridge.unloadStateStores()
     }
   }

@@ -1,20 +1,14 @@
 package graft
 
-/** Pins the bench-boundary housekeeping contract (GraftSession.releaseCaches
-  * / quiesce / syncBarrier): boundary calls must be safe on a live session —
-  * running queries before AND after them — and must actually drop cached
-  * storage, because Bench charges none of this work to any query and a
-  * boundary that broke the session would surface as a bogus `err:` entry on
-  * whatever query runs next.
+/** Pins the per-pass housekeeping contract (GraftSession.releaseCaches /
+  * syncBarrier): Bench and Verify call them between queries, so they must
+  * be safe on a live session — running queries before AND after them —
+  * and must actually drop cached storage and scratch, because no
+  * registered entry shares a build with another and Bench charges none of
+  * this work to any query. A release that broke the session would surface
+  * as a bogus `err:` entry on whatever query runs next.
   */
 class BenchBoundarySpec extends SparkSpec {
-
-  test("quiesce is safe on a live session and queries run after it") {
-    val before = spark.range(1000).selectExpr("sum(id) AS s").collect()(0).getLong(0)
-    GraftSession.quiesce(spark)
-    val after = spark.range(1000).selectExpr("sum(id) AS s").collect()(0).getLong(0)
-    assert(before == after)
-  }
 
   test("releaseCaches drops session-cached frames") {
     val df = spark.range(5000).toDF("id")
@@ -24,21 +18,25 @@ class BenchBoundarySpec extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
+  test("releaseCaches unpersists everything a dedup entry persisted") {
+    GraftSession.releaseCaches(spark)
+    assert(operators.Dedup.dedupClusters.fn(spark, sfDir).count() > 0)
+    assert(!spark.sharedState.cacheManager.isEmpty,
+      "dedup_clusters persists its signature and pair frames inside the query")
+    GraftSession.releaseCaches(spark)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("syncBarrier completes (flush is untimed boundary work, never a query's)") {
     GraftSession.syncBarrier() // must not throw, with or without a sync binary
   }
 
   test("releaseCaches reclaims per-invocation scratch; CDC trio rebuilds after") {
-    val user = sys.props.getOrElse("user.name", "unknown")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val root = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_scratch_$user")
+    val root = operators.IngestLake.localScratchRoot
     // per-invocation dirs are <root>/<name>/<uuid>; the digest-keyed IVF
-    // centroid cache (<root>/ivf/...), the bench canary, and the memoized
-    // CDC scenario (<root>/cdc/...) are deliberately exempt from reclaim
-    // (reclaimScratch's documented contract), so scope the check to dirs
-    // that APPEAR during the lake query and are not exempt
-    val exempt = Set("ivf", "cdc", "bench_canary_v1")
+    // index, the wide CSV corpus and the bench canary are reused across
+    // runs and never reclaimed, so scope the check to dirs that APPEAR
+    // during the lake queries
     def uuidDirs: Set[java.nio.file.Path] =
       if (!java.nio.file.Files.exists(root)) Set.empty
       else {
@@ -46,25 +44,26 @@ class BenchBoundarySpec extends SparkSpec {
         try {
           import scala.jdk.CollectionConverters._
           w.iterator().asScala
-            .filter(p => p.getParent != null && p.getParent.getParent != null &&
-              p.getParent.getParent == root &&
-              !exempt.contains(p.getParent.getFileName.toString))
+            .filter(p => p.getParent != null && p.getParent.getParent == root)
             .toSet
         } finally w.close()
       }
+    def under(dirs: Set[java.nio.file.Path], name: String) =
+      dirs.filter(_.getParent.getFileName.toString == name)
     val pre = uuidDirs
-    // a lake query allocates scratch and fully materializes through it
-    val before = operators.IngestLake.lakeCtas.fn(spark, sfDir).count()
-    assert(before > 0)
+    // lake queries allocate scratch and fully materialize through it; the
+    // CDC and SQL-surface tables are built on it by every call
+    assert(operators.IngestLake.lakeCtas.fn(spark, sfDir).count() > 0)
+    assert(operators.IngestLake.lakeMergeUpsert.fn(spark, sfDir).count() > 0)
+    assert(operators.IngestLake.lakeSqlSurface.fn(spark, sfDir).count() > 0)
     val created = uuidDirs -- pre
-    assert(created.nonEmpty, "lake query should have written scratch")
+    Seq("ctas", "cdc", "sqlsurface").foreach(n =>
+      assert(under(created, n).nonEmpty, s"lake query should have written $n scratch"))
     GraftSession.releaseCaches(spark)
-    assert((uuidDirs -- pre).isEmpty,
-      "family-boundary release must reclaim dead scratch")
-    // the memoized CDC scenario (the one cross-query scratch consumer)
-    // must rebuild on fresh scratch after reclamation, not read a tomb
-    val cdc = operators.IngestLake.lakeMergeUpsert.fn(spark, sfDir).count()
-    assert(cdc > 0)
+    val left = uuidDirs -- pre
+    assert(left.isEmpty, s"release must reclaim every query's scratch, left: $left")
+    // the next call builds its table on fresh scratch, not on a tomb
+    assert(operators.IngestLake.lakeChangelog.fn(spark, sfDir).count() > 0)
     GraftSession.releaseCaches(spark)
     assert((uuidDirs -- pre).isEmpty)
   }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * scale factor's documents+embeddings and times the heaviest pipelines
   * (MinHash near-dup, brute-force ANN) at each size. Run manually:
   *
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.ScaleProbe /root/testdata/sf0.1"
+  *   SPARK_GRAFT_CPUS=32 sbt "Test/runMain graft.ScaleProbe <sf dir> [sections]"
   *
   * A super-linear blow-up here means a bucket cap or broadcast assumption
   * broke — the cheap local canary for the 100 TB question.
