@@ -130,8 +130,8 @@ object DeltaExport {
     // re-export rewrite already-committed versions with different bytes)
     val createdTime = fs.getFileStatus(
       new Path(tableDir, f"manifests/v${versions.head}%05d.txt")).getModificationTime
-    val entriesByV = versions.map(v => v -> catalog.entriesOf(ns, t, v)).toMap
-    val anyDv = versions.exists(v => entriesByV(v).exists(_.startsWith("dv/")))
+    val snaps = versions.map(v => catalog.snapshot(ns, t, Some(v)))
+    val anyDv = snaps.exists(_.dvs.nonEmpty)
 
     // (relative path, size, mtime, numRecords, partitionValues) per file of
     // a commit dir — footer-only IO, resolved once per dir across versions
@@ -142,8 +142,8 @@ object DeltaExport {
     // per-file DV blobs of a snapshot's cumulative dv/ sidecar set, cached
     // by set (stacked-delete lineages reuse the prior set's read)
     val dvCache = scala.collection.mutable.Map.empty[Seq[String], Map[String, (Array[Byte], Long)]]
-    def dvBlobsOf(dvRels: Seq[String]): Map[String, (Array[Byte], Long)] =
-      dvCache.getOrElseUpdate(dvRels.sorted, dvBlobs(spark, tableDir, dvRels.sorted))
+    def dvBlobsOf(dvDirs: Seq[String]): Map[String, (Array[Byte], Long)] =
+      dvCache.getOrElseUpdate(dvDirs.sorted, dvBlobs(spark, tableDir, dvDirs.sorted))
 
     val tableId = java.util.UUID.nameUUIDFromBytes(
       s"graft-delta:$ns.$t".getBytes(StandardCharsets.UTF_8)).toString
@@ -153,12 +153,11 @@ object DeltaExport {
     var prevGraftV = -1 // graft version behind the previous Delta version
     var prevMeta: Option[(String, Seq[String])] = None
     var deltaV = -1L
-    versions.foreach { v =>
+    snaps.foreach { snap =>
+      val v = snap.version
       deltaV += 1
-      val entries = entriesByV(v)
-      val cur = entries.filterNot(e => e.startsWith("dv/") || e.startsWith("txn/"))
-        .flatMap(filesOf).map(f => f.rel -> f).toMap
-      val dvByFile = dvBlobsOf(entries.filter(_.startsWith("dv/")))
+      val cur = snap.data.flatMap(filesOf).map(f => f.rel -> f).toMap
+      val dvByFile = dvBlobsOf(snap.dvs)
       val schema = catalog.read(ns, t, Some(v)).schema
       // partitionColumns is TABLE-LEVEL state in Delta, derived here from
       // the snapshot's live files. graft rewrites (CoW DELETE, compaction)
@@ -217,7 +216,7 @@ object DeltaExport {
       // graft txn/ watermark lines are Delta's native idea (PROTOCOL.md
       // § Transaction Identifiers): emit the moved marks as txn actions so
       // an external Delta reader sees the same idempotent-sink state
-      val curTxn = graftTxnMarks(entries)
+      val curTxn = snap.txns
       curTxn.toSeq.sortBy(_._1).foreach { case (app, ver) =>
         if (!prevTxn.get(app).contains(ver)) lines += txnLine(app, ver)
       }
@@ -277,12 +276,12 @@ object DeltaExport {
     * Driver holds only the COMPRESSED bitmaps (Delta's own log economics).
     */
   private def dvBlobs(spark: SparkSession, tableDir: Path,
-      dvRels: Seq[String]): Map[String, (Array[Byte], Long)] =
-    if (dvRels.isEmpty) Map.empty
+      dvDirs: Seq[String]): Map[String, (Array[Byte], Long)] =
+    if (dvDirs.isEmpty) Map.empty
     else {
       import org.apache.spark.sql.functions.{col, collect_list}
       import spark.implicits._
-      spark.read.parquet(dvRels.map(r => new Path(tableDir, r).toString): _*)
+      spark.read.parquet(dvDirs.map(r => new Path(tableDir, r).toString): _*)
         .groupBy(col("_dv_file")).agg(collect_list(col("_dv_pos")).as("ps"))
         .as[(String, Seq[Long])].collect()
         .map { case (f, ps) =>
@@ -483,16 +482,6 @@ object DeltaExport {
       a.set[com.fasterxml.jackson.databind.JsonNode]("deletionVector", mapper.readTree(j)))
     mapper.writeValueAsString(o)
   }
-
-  /** appId -> batch id from a manifest's `txn/<urlenc app>=<id>` lines. */
-  private def graftTxnMarks(entries: Seq[String]): Map[String, Long] =
-    entries.filter(_.startsWith("txn/")).flatMap { e =>
-      e.stripPrefix("txn/").split("=", 2) match {
-        case Array(app, v) =>
-          Some(java.net.URLDecoder.decode(app, "UTF-8") -> v.toLong)
-        case _ => None
-      }
-    }.toMap
 
   private def txnLine(appId: String, version: Long): String = {
     val o = mapper.createObjectNode()

@@ -90,14 +90,14 @@ object IcebergExport {
         .map(f => f.get("name").asText() -> f.get("id").asInt()).toMap
     }
 
-    // ---- manifests: one per unique commit-dir entry, shared by snapshots
-    // (txn/ watermark lines are engine-side sink state with no Iceberg
-    // counterpart at the file level — stripped from the exported view)
-    val entriesByV = versions.map(v =>
-      v -> catalog.entriesOf(ns, t, v).filterNot(_.startsWith("txn/"))).toMap
+    // ---- manifests: one per unique commit dir, shared by snapshots
+    // (txn marks and column declarations are table state with no Iceberg
+    // counterpart at the file level — only dirs are exported)
+    val snaps = versions.map(v => catalog.snapshot(ns, t, Some(v)))
+    val dvDirs = snaps.flatMap(_.dvs).toSet
     val firstSeen = scala.collection.mutable.LinkedHashMap[String, Int]()
-    versions.foreach(v => entriesByV(v).foreach(e =>
-      if (!firstSeen.contains(e)) firstSeen(e) = v))
+    snaps.foreach(s => s.dirs.foreach(e =>
+      if (!firstSeen.contains(e)) firstSeen(e) = s.version))
 
     // HIVE-PARTITIONED commits keep their partition-column VALUES in dir
     // names, not in the parquet files — Iceberg's mechanism for exactly
@@ -109,7 +109,7 @@ object IcebergExport {
     // nothing leaks into the spec.
     val partitionCols = scala.collection.mutable.LinkedHashSet[String]()
     val filesByEntry: Map[String, Seq[(Path, Seq[(String, String)])]] =
-      firstSeen.keys.filterNot(_.startsWith("dv/")).map { rel =>
+      firstSeen.keys.filterNot(dvDirs).map { rel =>
         val files = parquetFilesUnder(fs, new Path(tableDir, rel)).map { p =>
           val pv = partitionValuesOf(new Path(tableDir, rel), p)
           pv.foreach { case (k, _) => partitionCols += k }
@@ -124,7 +124,7 @@ object IcebergExport {
     // indexes position deletes by partition, so a delete file carrying a
     // null tuple would never be applied to partitioned data files
     val deleteFilesByEntry: Map[String, Seq[(Path, Seq[(String, String)])]] =
-      firstSeen.keys.filter(_.startsWith("dv/")).map { rel =>
+      firstSeen.keys.filter(dvDirs).map { rel =>
         rel -> rewritePositionDeletes(spark, fs, tableDir, location, rel,
           partitionCols.toSeq)
       }.toMap
@@ -139,7 +139,7 @@ object IcebergExport {
     val manifestByEntry =
       scala.collection.mutable.LinkedHashMap[String, (Seq[org.apache.avro.generic.GenericRecord], Boolean, Long)]()
     for ((rel, seenV) <- firstSeen) {
-      val isDelete = rel.startsWith("dv/")
+      val isDelete = dvDirs(rel)
       val files: Seq[(Path, Long, Long, Seq[(String, String)])] =
         (if (isDelete) deleteFilesByEntry(rel) else filesByEntry(rel)).map {
           case (p, pv) =>
@@ -180,11 +180,11 @@ object IcebergExport {
     val snapshots = mapper.createArrayNode()
     val snapshotLog = mapper.createArrayNode()
     var lastTs = 0L
-    for (v <- versions) {
-      val entries = entriesByV(v)
-      val listRecords = entries.map { rel =>
+    for ((snap, i) <- snaps.zipWithIndex) {
+      val v = snap.version
+      val listRecords = snap.dirs.map { rel =>
         val (mPath, mLen, nFiles, nRows) = manifestMeta(rel)
-        val isDelete = rel.startsWith("dv/")
+        val isDelete = dvDirs(rel)
         val added = firstSeen(rel) == v
         avro.manifestFileRecord(
           manifestPath = mPath, manifestLength = mLen,
@@ -211,11 +211,10 @@ object IcebergExport {
       sn.put("manifest-list", fs.makeQualified(listPath).toString)
       sn.put("schema-id", 0)
       val summary = sn.putObject("summary")
-      summary.put("operation", operationOf(v, versions, entriesByV))
-      summary.put("added-data-files",
-        entries.count(e => firstSeen(e) == v && !e.startsWith("dv/")).toString)
-      summary.put("total-records",
-        entries.filterNot(_.startsWith("dv/")).map(manifestMeta(_)._4).sum.toString)
+      summary.put("operation",
+        if (i == 0) "append" else operationOf(snaps(i - 1).diff(snap)))
+      summary.put("added-data-files", snap.data.count(firstSeen(_) == v).toString)
+      summary.put("total-records", snap.data.map(manifestMeta(_)._4).sum.toString)
       val lg = snapshotLog.addObject()
       lg.put("timestamp-ms", ts)
       lg.put("snapshot-id", v.toLong)
@@ -504,20 +503,14 @@ object IcebergExport {
     (p, fs.getFileStatus(p).getLen, records)
   }
 
-  private def operationOf(v: Int, versions: Seq[Int],
-      entriesByV: Map[Int, Seq[String]]): String = {
-    val idx = versions.indexOf(v)
-    if (idx == 0) "append"
-    else {
-      val prev = entriesByV(versions(idx - 1)).toSet
-      val cur = entriesByV(v).toSet
-      if (prev.subsetOf(cur)) {
-        val added = cur -- prev
-        if (added.nonEmpty && added.forall(_.startsWith("dv/"))) "delete" else "append"
-      } else if (cur.subsetOf(prev)) "delete"
-      else "overwrite"
-    }
-  }
+  /** The Iceberg operation of a snapshot: only vectors added is a delete,
+    * nothing removed an append, nothing added a delete, else an overwrite.
+    */
+  private def operationOf(d: Snapshot.Diff): String =
+    if (d.removed.isEmpty && d.dvsRemoved.isEmpty) {
+      if (d.added.isEmpty && d.dvsAdded.nonEmpty) "delete" else "append"
+    } else if (d.added.isEmpty && d.dvsAdded.isEmpty) "delete"
+    else "overwrite"
 
   /** Rewrite one graft `dv/` sidecar (table-relative `_dv_file`, `_dv_pos`)
     * into spec-shaped position-delete parquet: absolute `file_path` with

@@ -24,8 +24,8 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
   *
   * Layout per table:
   * {{{
-  *   <root>/<ns>/<table>/manifests/v00001.txt   # one committed version; each
-  *                                              # line = a relative data dir
+  *   <root>/<ns>/<table>/manifests/v00001.txt   # one committed version: one
+  *                                              # entry per line ([[Snapshot]])
   *   <root>/<ns>/<table>/data/<commit-uuid>/    # parquet files of one commit
   *        .../_graft_stats.tsv                  # its stats + commit record
   *   <root>/<ns>/<table>/_graft_schemas/<id>.json # one per distinct schema
@@ -133,12 +133,12 @@ final class LakeCatalog(
     * stats fall back to one count job.
     */
   def rowCount(ns: String, t: String): Long = {
-    val (_, rels) = latestEntries(ns, t)
-    val data = dataRels(rels).map(rel => commitStats(ns, t, rel).map(_._1))
+    val snap = snapshot(ns, t)
+    val data = snap.data.map(rel => commitStats(ns, t, rel).map(_._1))
     // each deletion-vector row marks exactly one live row (marking scans
     // exclude already-marked rows; rewrites prune dangling refs), so the
     // metadata-only count is data-sidecar sum minus vector-sidecar sum
-    val dvs = dvRels(rels).map(rel => commitStats(ns, t, rel).map(_._1))
+    val dvs = snap.dvs.map(rel => commitStats(ns, t, rel).map(_._1))
     if (data.nonEmpty && (data ++ dvs).forall(_.isDefined))
       data.flatten.sum - dvs.flatten.sum
     else read(ns, t).count()
@@ -151,9 +151,44 @@ final class LakeCatalog(
       case LakeCatalog.ManifestName(v) => v.toInt
     }.sorted
 
-  private[lake] def manifestEntries(ns: String, t: String, version: Int): Seq[String] =
-    new String(backend.readBytes(manifestFile(ns, t, version)), StandardCharsets.UTF_8)
-      .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
+  /** Snapshot `version` of the table (default: the latest) — the one
+    * lookup every verb resolves its entry list through. A given version
+    * costs one manifest read (the listing only names a missing one); the
+    * latest costs one listing more.
+    */
+  def snapshot(ns: String, t: String, version: Option[Int] = None): Snapshot =
+    version match {
+      case None =>
+        val s = current(ns, t)
+        require(s.nonEmpty, s"no such table: $ns.$t")
+        s.get
+      case Some(v) =>
+        try load(manifestFile(ns, t, v), v)
+        catch {
+          case e: java.io.FileNotFoundException =>
+            val vs = versions(ns, t)
+            require(vs.nonEmpty, s"no such table: $ns.$t")
+            require(vs.contains(v), s"no snapshot v$v of $ns.$t (have: ${vs.mkString(",")})")
+            throw e
+        }
+    }
+
+  /** The latest snapshot, None while the table has no version. */
+  private def current(ns: String, t: String): Option[Snapshot] =
+    versions(ns, t).lastOption.map(v => load(manifestFile(ns, t, v), v))
+
+  private def load(manifest: Path, version: Int): Snapshot =
+    Snapshot.parse(version, backend.readBytes(manifest))
+
+  /** Write `s` to a temp file named after `stem` and rename it onto
+    * `target` only if that is absent, so readers never see a half-written
+    * manifest. False (temp removed) when another writer published first.
+    */
+  private def publish(target: Path, stem: String, s: Snapshot): Boolean = {
+    val tmp = new Path(target.getParent, s".$stem-${java.util.UUID.randomUUID().toString}.tmp")
+    backend.writeBytes(tmp, s.render)
+    backend.renameIfAbsent(tmp, target) || { backend.delete(tmp); false }
+  }
 
   /** How long a version lock may sit without its manifest appearing before
     * it is considered abandoned by a crashed writer and broken.
@@ -184,7 +219,7 @@ final class LakeCatalog(
       }
     }
 
-  /** Publish `dataDirs` as the next version. Optimistic: verifies the
+  /** Publish `entries` as the next version. Optimistic: verifies the
     * current latest against `expectedVersion` (when given), atomically
     * claims the version via [[claim]], then renames a fully-written temp
     * manifest onto the versioned name — readers can never observe a
@@ -194,7 +229,7 @@ final class LakeCatalog(
   private def commit(
       ns: String,
       t: String,
-      dataDirs: Seq[String],
+      entries: Seq[String],
       expectedVersion: Option[Int]): Int = {
     backend.mkdirs(manifestDir(ns, t))
     val cur = versions(ns, t).lastOption.getOrElse(0)
@@ -209,17 +244,11 @@ final class LakeCatalog(
       throw new CommitConflictException(
         s"concurrent writer is publishing $ns.$t v$v")
     try {
-      val tmp = new Path(manifestDir(ns, t),
-        s".v$v-${java.util.UUID.randomUUID().toString}.tmp")
-      backend.writeBytes(tmp,
-        dataDirs.mkString("\n").getBytes(StandardCharsets.UTF_8))
       // the claim makes a same-version racer impossible; renameIfAbsent
       // stays as belt-and-braces against external interference
-      if (!backend.renameIfAbsent(tmp, target)) {
-        backend.delete(tmp)
+      if (!publish(target, s"v$v", Snapshot(v, entries)))
         throw new CommitConflictException(
           s"concurrent writer published $ns.$t v$v first")
-      }
       v
     } finally { backend.delete(lock) }
   }
@@ -231,14 +260,11 @@ final class LakeCatalog(
     * by `dv/` entries are filtered out via a broadcast anti-join, with no
     * data dir ever rewritten.
     */
-  def read(ns: String, t: String, version: Option[Int] = None): DataFrame = {
-    val vs = versions(ns, t)
-    require(vs.nonEmpty, s"no such table: $ns.$t")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"no snapshot v$v of $ns.$t (have: ${vs.mkString(",")})")
-    val entries = manifestEntries(ns, t, v)
-    withDeclaredCols(readDirsClean(ns, t, entries, dataRels(entries)), entries)
-  }
+  def read(ns: String, t: String, version: Option[Int] = None): DataFrame =
+    readSnapshot(ns, t, snapshot(ns, t, version))
+
+  private def readSnapshot(ns: String, t: String, snap: Snapshot): DataFrame =
+    withDeclaredCols(readDirsClean(ns, t, snap, snap.data), snap)
 
   /** Time travel by WALL CLOCK (Iceberg/Delta `TIMESTAMP AS OF` analog):
     * read the snapshot whose manifest was the latest published at or
@@ -267,7 +293,7 @@ final class LakeCatalog(
     require(vs.nonEmpty, s"no such table: $ns.$t")
     vs.map(v => (v,
       backend.mtime(manifestFile(ns, t, v)).getOrElse(0L),
-      manifestEntries(ns, t, v).size))
+      load(manifestFile(ns, t, v), v).entries.size))
   }
 
   /** Streaming-source seam: one snapshot's manifest split into (data dirs,
@@ -276,8 +302,8 @@ final class LakeCatalog(
     * invisible here, as on every read path).
     */
   def snapshotEntries(ns: String, t: String, version: Int): (Seq[String], Seq[String]) = {
-    val e = manifestEntries(ns, t, version)
-    (dataRels(e), dvRels(e))
+    val s = snapshot(ns, t, Some(version))
+    (s.data, s.dvs)
   }
 
   /** Streaming-source seam: raw scan over specific commit dirs with NO
@@ -295,7 +321,7 @@ final class LakeCatalog(
     */
   def readSnapshotDirs(ns: String, t: String, version: Int,
       wanted: Seq[String]): DataFrame =
-    readDirsClean(ns, t, manifestEntries(ns, t, version), wanted)
+    readDirsClean(ns, t, snapshot(ns, t, Some(version)), wanted)
 
   /** Streaming-source seam (r15 `maxBytesPerTrigger`): the parquet files
     * of one commit dir — (name, bytes) sorted by name — when the dir is
@@ -327,12 +353,11 @@ final class LakeCatalog(
     * KB-sized dv sidecars' distinct file parents).
     */
   def dvMarkedDataRels(ns: String, t: String, version: Int): Set[String] = {
-    val e = manifestEntries(ns, t, version)
-    val dvs = dvRels(e)
-    if (dvs.isEmpty) Set.empty
+    val s = snapshot(ns, t, Some(version))
+    if (s.dvs.isEmpty) Set.empty
     else {
-      val m = markedDirs(ns, t, dvs)
-      dataRels(e).filter(rel => entryMarked(m, rel)).toSet
+      val m = markedDirs(ns, t, s.dvs)
+      s.data.filter(rel => entryMarked(m, rel)).toSet
     }
   }
 
@@ -366,19 +391,6 @@ final class LakeCatalog(
     }
     SchemaTools.unifySchemas(fulls ++ parts)
   }
-
-  /** Latest committed version and its manifest entries (relative data
-    * dirs) — the read side of a file-scoped rewrite: callers stage against
-    * this version and pass it to [[commitRewrite]] as the CAS base.
-    */
-  def latestEntries(ns: String, t: String): (Int, Seq[String]) = {
-    val vs = versions(ns, t)
-    require(vs.nonEmpty, s"no such table: $ns.$t")
-    (vs.last, manifestEntries(ns, t, vs.last))
-  }
-
-  private[lake] def entriesOf(ns: String, t: String, version: Int): Seq[String] =
-    manifestEntries(ns, t, version)
 
   /** Scans of the given commit dirs. Dirs with a commit RECORD
     * ([[writeStats]]) scan from their recorded files through the catalog
@@ -423,17 +435,19 @@ final class LakeCatalog(
   }
 
   /** Like [[readDirs]] but every row carries its commit dir in a tag
-    * column — the scan-to-plan phase of file-scoped MERGE/DELETE reads
-    * this once, filters, and collects the DISTINCT tag values (bounded by
-    * the number of commits) to learn which commits a delta actually
-    * touches. The tag name is chosen collision-free against the table's
-    * own columns (a user table may genuinely contain `_graft_commit`;
+    * column, with `snap`'s deletion vectors applied — the scan-to-plan
+    * phase of file-scoped MERGE/DELETE reads this once, filters, and
+    * collects the DISTINCT tag values (bounded by the number of commits)
+    * to learn which commits a delta actually touches. The tag name is
+    * chosen collision-free against the table's own columns (a user table
+    * may genuinely contain `_graft_commit`;
     * shadowing it would make predicates on that column evaluate against
     * the injected literal) and returned alongside the frame.
     */
-  def readTagged(ns: String, t: String, rels: Seq[String]): (DataFrame, String) = {
+  def readTagged(ns: String, t: String, snap: Snapshot,
+      rels: Seq[String]): (DataFrame, String) = {
     import org.apache.spark.sql.functions.{col, lit, substring_index}
-    val dvs = dvRels(latestEntries(ns, t)._2)
+    val dvs = snap.dvs
     // the grouped-scan tag derives from the file path's first two
     // segments, which is only exact for plain "data/<uuid>" entries —
     // deeper entries (z-buckets) keep their per-dir literal tag
@@ -480,41 +494,19 @@ final class LakeCatalog(
   // index) — stable across reads because parquet row order is the file
   // order.
 
-  private[lake] def dataRels(entries: Seq[String]): Seq[String] =
-    entries.filterNot(e =>
-      e.startsWith("dv/") || e.startsWith("txn/") || e.startsWith("col/"))
-  private[lake] def dvRels(entries: Seq[String]): Seq[String] =
-    entries.filter(_.startsWith("dv/"))
-  private[lake] def txnRels(entries: Seq[String]): Seq[String] =
-    entries.filter(_.startsWith("txn/"))
-  private[lake] def colRels(entries: Seq[String]): Seq[String] =
-    entries.filter(_.startsWith("col/"))
-
   /** DECLARED COLUMNS (r16, VERDICT r15 #5 — `ALTER TABLE ADD COLUMN`):
-    * manifest lines `col/<urlenc name>=<urlenc DataType.json>`, a sibling
-    * entry class to `txn/` (metadata riding the atomically-published
-    * manifest, filtered from every data path by [[dataRels]]). A declared
-    * column that no data dir carries yet reads as NULL ([[read]] injects
-    * it); the first write that CARRIES the column materializes it and the
-    * declaration becomes a no-op — the same null-fill semantics write-time
-    * `unionByName` evolution already gives, now reachable as a verb.
+    * `col/` manifest lines ([[Snapshot.columns]]), metadata riding the
+    * atomically-published manifest and absent from every data path. A
+    * declared column that no data dir carries yet reads as NULL ([[read]]
+    * injects it); the first write that CARRIES the column materializes it
+    * and the declaration becomes a no-op — the same null-fill semantics
+    * write-time `unionByName` evolution already gives, now reachable as a
+    * verb. Null-fills the snapshot's declared-but-unwritten columns
+    * (appended at the end, the Delta/Iceberg ADD COLUMN position).
     */
-  private[lake] def declaredCols(entries: Seq[String])
-      : Seq[(String, org.apache.spark.sql.types.DataType)] =
-    colRels(entries).flatMap { e =>
-      e.stripPrefix("col/").split("=", 2) match {
-        case Array(n, tj) =>
-          Some(dec(n) -> org.apache.spark.sql.types.DataType.fromJson(dec(tj)))
-        case _ => None
-      }
-    }
-
-  /** Null-fill the snapshot's declared-but-unwritten columns (appended at
-    * the end, the Delta/Iceberg ADD COLUMN position).
-    */
-  private def withDeclaredCols(df: DataFrame, entries: Seq[String]): DataFrame = {
+  private def withDeclaredCols(df: DataFrame, snap: Snapshot): DataFrame = {
     val have = df.columns.map(_.toLowerCase).toSet
-    declaredCols(entries).filterNot(c => have(c._1.toLowerCase)).foldLeft(df) {
+    snap.columns.filterNot(c => have(c._1.toLowerCase)).foldLeft(df) {
       case (d, (n, dt)) =>
         d.withColumn(n, org.apache.spark.sql.functions.lit(null).cast(dt))
     }
@@ -530,13 +522,12 @@ final class LakeCatalog(
     */
   def addColumn(ns: String, t: String, name: String,
       dataType: org.apache.spark.sql.types.DataType): Int = {
-    val (base, entries) = latestEntries(ns, t)
-    val existing = read(ns, t, Some(base)).schema.fieldNames
+    val snap = snapshot(ns, t)
+    val existing = readSnapshot(ns, t, snap).schema.fieldNames
       .map(_.toLowerCase).toSet
     require(!existing.contains(name.toLowerCase),
       s"column `$name` already exists in $ns.$t")
-    commit(ns, t, entries :+ s"col/${enc(name)}=${enc(dataType.json)}",
-      Some(base))
+    commit(ns, t, snap.withColumn(name, dataType), Some(snap.version))
   }
 
   /** File key relative to the table root ("data/<uuid>/…"), derived from
@@ -646,8 +637,8 @@ final class LakeCatalog(
     * commits leaves the read within noise of a vector-free read).
     */
   private[lake] def readDirsClean(ns: String, t: String,
-      entries: Seq[String], wanted: Seq[String]): DataFrame = {
-    val dvs = dvRels(entries)
+      snap: Snapshot, wanted: Seq[String]): DataFrame = {
+    val dvs = snap.dvs
     if (dvs.isEmpty) readDirs(ns, t, wanted)
     else {
       import org.apache.spark.sql.functions.col
@@ -676,10 +667,9 @@ final class LakeCatalog(
   def deleteMoR(ns: String, t: String, predicate: org.apache.spark.sql.Column): Int = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     val hit = coalesce(predicate, lit(false))
-    val (base, entries) = latestEntries(ns, t)
-    val data = dataRels(entries)
-    val dvs = dvRels(entries)
-    val marked0 = readDirsWithKey(ns, t, data).filter(hit)
+    val snap = snapshot(ns, t)
+    val dvs = snap.dvs
+    val marked0 = readDirsWithKey(ns, t, snap.data).filter(hit)
       .select(col("__graft_file").as("_dv_file"), col("__graft_pos").as("_dv_pos"))
     val marked =
       if (dvs.isEmpty) marked0
@@ -692,8 +682,8 @@ final class LakeCatalog(
     val v =
       if (dvRows == 0L) {
         deleteRec(out)
-        commit(ns, t, entries, Some(base))
-      } else commit(ns, t, entries :+ rel, Some(base))
+        commit(ns, t, snap.entries, Some(snap.version))
+      } else commit(ns, t, snap.entries :+ rel, Some(snap.version))
     // AUTO-MATERIALIZE VALVE (opt-in): once the snapshot's accumulated
     // vectors pass the broadcast ceiling, every subsequent read pays a
     // shuffled anti-join — at 100 TB that maintenance decision should be
@@ -718,15 +708,13 @@ final class LakeCatalog(
     * is nothing to fold).
     */
   def materializeDeletes(ns: String, t: String): Int = {
-    val (base, entries) = latestEntries(ns, t)
-    val dvs = dvRels(entries)
-    if (dvs.isEmpty) return base
-    val marked = markedDirs(ns, t, dvs)
+    val snap = snapshot(ns, t)
+    if (snap.dvs.isEmpty) return snap.version
+    val marked = markedDirs(ns, t, snap.dvs)
     // entries (2-segment commits or deeper z-bucket entries) that
     // actually contain marked files — only they are rewritten
-    val touched = dataRels(entries).filter(e => entryMarked(marked, e)).toSet
-    commitRewrite(ns, t, base, touched,
-      readDirsClean(ns, t, entries, entries.filter(touched)))
+    val touched = snap.data.filter(e => entryMarked(marked, e))
+    commitRewrite(ns, t, snap, touched.toSet, readDirsClean(ns, t, snap, touched))
   }
 
   /** Column count at which a commit switches to the WIDE writer profile. */
@@ -781,33 +769,24 @@ final class LakeCatalog(
         .parquet(out.toString)
     }
     writeStats(ns, t, rel)
-    mode match {
-      case SaveMode.Append if tableExists(ns, t) =>
+    (mode, current(ns, t)) match {
+      case (SaveMode.Append, Some(snap)) =>
         // an append EXTENDS the entry list it read, so it is always CAS'd
         // against the version it extended — otherwise a concurrent commit
         // landing between the read and the publish would be silently
         // dropped from the new manifest (lost update). Callers may still
         // pin an earlier expectedVersion explicitly.
-        val base = versions(ns, t).last
-        commit(ns, t,
-          manifestEntries(ns, t, base) :+ rel,
-          expectedVersion.orElse(Some(base)))
-      case _ =>
+        commit(ns, t, snap.entries :+ rel, expectedVersion.orElse(Some(snap.version)))
+      case (_, prev) =>
         // an OVERWRITE replaces the DATA, not the table's transaction
         // history: sink high-water marks (txn/ lines) survive, exactly as
         // Delta's setTransaction actions survive an overwrite — otherwise a
         // maintenance overwrite racing a streaming sink would reopen the
-        // sink's replay window
-        val carried =
-          if (tableExists(ns, t)) {
-            val prev = manifestEntries(ns, t, versions(ns, t).last)
-            // declared columns survive an overwrite like txn watermarks do
-            // (Delta keeps the table schema across INSERT OVERWRITE); the
-            // read-side guard only injects them when the new data does not
-            // already carry the name
-            txnRels(prev) ++ colRels(prev)
-          } else Nil
-        commit(ns, t, carried :+ rel, expectedVersion)
+        // sink's replay window. Declared columns survive too (Delta keeps
+        // the table schema across INSERT OVERWRITE); the read-side guard
+        // only injects them when the new data does not already carry the
+        // name.
+        commit(ns, t, prev.fold(Seq.empty[String])(_.tableState) :+ rel, expectedVersion)
     }
   }
 
@@ -820,26 +799,12 @@ final class LakeCatalog(
   // append carries its application id + batch id INSIDE the manifest it
   // publishes — one CAS'd rename, so the data and the watermark can never
   // tear — and a replayed batch id at or below the recorded high-water
-  // mark is a no-op. Manifest line shape: `txn/<urlenc appId>=<batchId>`,
-  // a sibling entry class to `dv/` that every data-path consumer filters
-  // out via [[dataRels]].
-
-  private def txnLine(appId: String, batchId: Long): String =
-    s"txn/${enc(appId)}=$batchId"
-
-  /** appId -> highest applied batch id recorded in `entries`. */
-  private[lake] def txnWatermarks(entries: Seq[String]): Map[String, Long] =
-    txnRels(entries).flatMap { e =>
-      e.stripPrefix("txn/").split("=", 2) match {
-        case Array(app, v) => Some(dec(app) -> v.toLong)
-        case _ => None
-      }
-    }.toMap
+  // mark is a no-op. Manifest line shape: `txn/<urlenc appId>=<batchId>`
+  // ([[Snapshot.txns]]), absent from every data path.
 
   /** The latest batch id `appId` has committed to `ns.t`, if any. */
   def txnVersion(ns: String, t: String, appId: String): Option[Long] =
-    if (!tableExists(ns, t)) None
-    else txnWatermarks(latestEntries(ns, t)._2).get(appId)
+    current(ns, t).flatMap(_.txns.get(appId))
 
   /** Idempotent APPEND: commit `df` tagged with (`appId`, `batchId`),
     * or no-op (returning None) when a commit with `batchId` or later from
@@ -852,26 +817,22 @@ final class LakeCatalog(
     */
   def writeTxn(ns: String, t: String, appId: String, batchId: Long,
       df: DataFrame, partitionBy: Seq[String] = Nil): Option[Int] = {
-    def current: (Int, Seq[String]) =
-      if (tableExists(ns, t)) latestEntries(ns, t) else (0, Nil)
-    def replayed(entries: Seq[String]): Boolean =
-      txnWatermarks(entries).get(appId).exists(_ >= batchId)
-    var (base, entries) = current
-    if (replayed(entries)) return None
+    def latest: Snapshot = current(ns, t).getOrElse(Snapshot.empty)
+    def replayed(s: Snapshot): Boolean = s.txns.get(appId).exists(_ >= batchId)
+    var snap = latest
+    if (replayed(snap)) return None
     val staged = stageWrite(ns, t, df, SaveMode.Append, partitionBy)
     var attempts = 0
     while (true) {
-      val keep = entries.filterNot(_.startsWith(s"txn/${enc(appId)}="))
       try {
-        return Some(commit(ns, t,
-          (keep :+ staged.rel) :+ txnLine(appId, batchId), Some(base)))
+        return Some(commit(ns, t, snap.withTxn(appId, batchId, Seq(staged.rel)),
+          Some(snap.version)))
       } catch {
         case e: CommitConflictException =>
           attempts += 1
-          val (b2, e2) = current
-          if (replayed(e2)) { abortStaged(staged); return None }
+          snap = latest
+          if (replayed(snap)) { abortStaged(staged); return None }
           if (attempts >= 8) { abortStaged(staged); throw e }
-          base = b2; entries = e2
       }
     }
     sys.error("unreachable")
@@ -889,12 +850,10 @@ final class LakeCatalog(
   def recordTxn(ns: String, t: String, appId: String, batchId: Long): Option[Int] = {
     var attempts = 0
     while (true) {
-      if (!tableExists(ns, t)) return None
-      val (base, entries) = latestEntries(ns, t)
-      if (dataRels(entries).isEmpty) return None
-      if (txnWatermarks(entries).get(appId).exists(_ >= batchId)) return None
-      val keep = entries.filterNot(_.startsWith(s"txn/${enc(appId)}="))
-      try return Some(commit(ns, t, keep :+ txnLine(appId, batchId), Some(base)))
+      val snap = current(ns, t).getOrElse(Snapshot.empty)
+      if (snap.data.isEmpty) return None
+      if (snap.txns.get(appId).exists(_ >= batchId)) return None
+      try return Some(commit(ns, t, snap.withTxn(appId, batchId), Some(snap.version)))
       catch {
         case e: CommitConflictException =>
           attempts += 1
@@ -911,24 +870,15 @@ final class LakeCatalog(
     */
   def writeBranchTxn(ns: String, t: String, name: String, appId: String,
       batchId: Long, df: DataFrame): Option[Int] = {
-    def replayed(entries: Seq[String]): Boolean =
-      txnWatermarks(entries).get(appId).exists(_ >= batchId)
-    if (replayed(branchEntries(ns, t, name))) return None
+    def replayed(s: Snapshot): Boolean = s.txns.get(appId).exists(_ >= batchId)
+    if (replayed(branchSnapshot(ns, t, name))) return None
     val staged = stageWrite(ns, t, df, SaveMode.Append)
     var attempts = 0
     while (true) {
-      val entries = branchEntries(ns, t, name)
-      if (replayed(entries)) { abortStaged(staged); return None }
-      val keep = entries.filterNot(_.startsWith(s"txn/${enc(appId)}="))
-      val next = (keep :+ staged.rel) :+ txnLine(appId, batchId)
-      val v = branchVersions(ns, t, name).lastOption.getOrElse(0) + 1
-      val target = branchManifest(ns, t, name, v)
-      val tmp = new Path(manifestDir(ns, t),
-        s".b$name-v$v-${java.util.UUID.randomUUID().toString}.tmp")
-      backend.writeBytes(tmp,
-        next.mkString("\n").getBytes(StandardCharsets.UTF_8))
-      if (backend.renameIfAbsent(tmp, target)) return Some(v)
-      backend.delete(tmp)
+      val snap = branchSnapshot(ns, t, name)
+      if (replayed(snap)) { abortStaged(staged); return None }
+      val published = commitBranch(ns, t, name, snap.withTxn(appId, batchId, Seq(staged.rel)))
+      if (published.nonEmpty) return published
       attempts += 1
       if (attempts >= 8) {
         abortStaged(staged)
@@ -971,8 +921,7 @@ final class LakeCatalog(
         .parquet(out.toString)
     }
     writeStats(ns, t, rel)
-    val base = if (tableExists(ns, t)) versions(ns, t).last else 0
-    StagedCommit(ns, t, rel, mode, base)
+    StagedCommit(ns, t, rel, mode, versions(ns, t).lastOption.getOrElse(0))
   }
 
   /** The staged commit's own rows — the audit surface for per-batch checks. */
@@ -997,7 +946,7 @@ final class LakeCatalog(
   def publishStaged(s: StagedCommit): Int = s.mode match {
     case SaveMode.Append if s.baseVersion > 0 =>
       commit(s.ns, s.table,
-        manifestEntries(s.ns, s.table, s.baseVersion) :+ s.rel,
+        snapshot(s.ns, s.table, Some(s.baseVersion)).entries :+ s.rel,
         Some(s.baseVersion))
     case _ => commit(s.ns, s.table, Seq(s.rel), Some(s.baseVersion))
   }
@@ -1051,22 +1000,20 @@ final class LakeCatalog(
     val fresh = fs.listStatus(out).filter(_.isDirectory)
       .map(st => s"$rel/${st.getPath.getName}").sorted.toSeq
     fresh.foreach(e => writeStats(ns, t, e))
-    mode match {
-      case SaveMode.Append if tableExists(ns, t) =>
-        val base = versions(ns, t).last
-        commit(ns, t, manifestEntries(ns, t, base) ++ fresh,
-          expectedVersion.orElse(Some(base)))
+    (mode, current(ns, t)) match {
+      case (SaveMode.Append, Some(snap)) =>
+        commit(ns, t, snap.entries ++ fresh, expectedVersion.orElse(Some(snap.version)))
       case _ =>
         commit(ns, t, fresh, expectedVersion)
     }
   }
 
   /** File-scoped copy-on-write commit (the Iceberg `MERGE INTO` rewrite
-    * shape): publish baseVersion's entry list with `replaced` dirs swapped
+    * shape): publish `base`'s entry list with `replaced` dirs swapped
     * for ONE fresh dir holding `replacement`. Untouched commits keep their
     * manifest entries VERBATIM — their data dirs are never read or
     * rewritten, so a delta touching 1 of N commits costs one commit's IO,
-    * not the table's. CAS'd against `baseVersion`: a concurrent commit in
+    * not the table's. CAS'd against `base`: a concurrent commit in
     * between raises [[CommitConflictException]] instead of resurrecting
     * rows the rewrite removed. An empty replacement is dropped from the
     * manifest entirely (unless it would leave the table with no dirs at
@@ -1075,12 +1022,11 @@ final class LakeCatalog(
   def commitRewrite(
       ns: String,
       t: String,
-      baseVersion: Int,
+      base: Snapshot,
       replaced: Set[String],
       replacement: DataFrame): Int = {
-    val entries = manifestEntries(ns, t, baseVersion)
-    val unknown = replaced -- entries.toSet
-    require(unknown.isEmpty, s"not in v$baseVersion of $ns.$t: ${unknown.mkString(",")}")
+    val unknown = replaced -- base.entries.toSet
+    require(unknown.isEmpty, s"not in v${base.version} of $ns.$t: ${unknown.mkString(",")}")
     val rel = s"data/${java.util.UUID.randomUUID().toString}"
     val out = new Path(tPath(ns, t), rel)
     withMicrosTimestamps {
@@ -1091,8 +1037,8 @@ final class LakeCatalog(
     // marked rows are gone from the data) — prune those refs, dropping or
     // rewriting each affected vector, so vector row counts stay exact
     // (rowCount subtracts them) and materializeDeletes converges
-    val keptData = dataRels(entries).filterNot(replaced)
-    val keptDvs = dvRels(entries).flatMap { dvRel =>
+    val keptData = base.data.filterNot(replaced)
+    val keptDvs = base.dvs.flatMap { dvRel =>
       import org.apache.spark.sql.functions.{col, substring_index}
       // a vector row belongs to entry e when its file sits under e —
       // flat commits are 2 path segments, z-bucket entries 3; testing
@@ -1117,8 +1063,8 @@ final class LakeCatalog(
     // sink's replay window
     val next =
       (if (rows == 0L && keptData.nonEmpty) { deleteRec(out); keptData ++ keptDvs }
-       else (keptData :+ rel) ++ keptDvs) ++ txnRels(entries) ++ colRels(entries)
-    commit(ns, t, next, Some(baseVersion))
+       else (keptData :+ rel) ++ keptDvs) ++ base.tableState
+    commit(ns, t, next, Some(base.version))
   }
 
   /** Change-data-capture between two snapshots (reference roadmap item
@@ -1141,28 +1087,25 @@ final class LakeCatalog(
     */
   def changelog(ns: String, t: String, fromV: Int, toV: Int): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val beforeEntries = manifestEntries(ns, t, fromV)
-    val afterEntries = manifestEntries(ns, t, toV)
-    val beforeData = dataRels(beforeEntries)
-    val afterData = dataRels(afterEntries)
-    val shared = beforeData.toSet intersect afterData.toSet
-    val remData = beforeData.filterNot(shared)
-    val addData = afterData.filterNot(shared)
+    val beforeSnap = snapshot(ns, t, Some(fromV))
+    val afterSnap = snapshot(ns, t, Some(toV))
+    val diff = beforeSnap.diff(afterSnap)
+    val shared = afterSnap.data.toSet -- diff.added
 
     def full(): DataFrame = {
-      val before = read(ns, t, Some(fromV))
-      val after = read(ns, t, Some(toV))
+      val before = readSnapshot(ns, t, beforeSnap)
+      val after = readSnapshot(ns, t, afterSnap)
       after.exceptAll(before).withColumn("_change", lit("insert"))
         .unionByName(before.exceptAll(after).withColumn("_change", lit("delete")))
     }
 
     // exclusive-dir rows, each side under ITS OWN deletion vectors
-    def sideRows(v: Int, entries: Seq[String], rels: Seq[String]): DataFrame =
-      readDirsClean(ns, t, entries, rels)
     val beforeSide =
-      if (remData.isEmpty) None else Some(sideRows(fromV, beforeEntries, remData))
+      if (diff.removed.isEmpty) None
+      else Some(readDirsClean(ns, t, beforeSnap, diff.removed))
     val afterSide =
-      if (addData.isEmpty) None else Some(sideRows(toV, afterEntries, addData))
+      if (diff.added.isEmpty) None
+      else Some(readDirsClean(ns, t, afterSnap, diff.added))
     // schema-evolution guard: the scoped subsets must agree with each
     // other; the full path owns the unified-read semantics otherwise
     val schemasAgree = (beforeSide, afterSide) match {
@@ -1175,8 +1118,6 @@ final class LakeCatalog(
     // one side = a row-level delete (newly marked in `to`) or insert
     // (unmarked by a rollback). Vector rows referencing exclusive dirs are
     // already accounted by the side reads.
-    val beforeDvs = dvRels(beforeEntries)
-    val afterDvs = dvRels(afterEntries)
     def marksIn(dvs: Seq[String]): Option[DataFrame] =
       if (dvs.isEmpty) None else Some(dvFrame(ns, t, dvs))
     def sharedOnly(df: DataFrame): DataFrame = {
@@ -1188,10 +1129,10 @@ final class LakeCatalog(
           substring_index(col("_dv_file"), "/", 3).isin(shared.toSeq: _*))
     }
     val dvDelta: Option[(DataFrame, DataFrame)] =
-      if (beforeDvs == afterDvs) None
+      if (!diff.dvsChanged) None
       else {
-        val b = marksIn(beforeDvs).map(sharedOnly)
-        val a = marksIn(afterDvs).map(sharedOnly)
+        val b = marksIn(beforeSnap.dvs).map(sharedOnly)
+        val a = marksIn(afterSnap.dvs).map(sharedOnly)
         val newlyMarked = (a, b) match {
           case (Some(am), Some(bm)) => am.exceptAll(bm)
           case (Some(am), None) => am
@@ -1211,7 +1152,7 @@ final class LakeCatalog(
         .collect().map(_.getString(0))
         .map(f => f.substring(0, f.lastIndexOf('/'))).toSet
       val touched = shared.toSeq.filter(e => entryMarked(dirs, e))
-      if (touched.isEmpty) return read(ns, t, Some(toV)).limit(0)
+      if (touched.isEmpty) return readSnapshot(ns, t, afterSnap).limit(0)
       readDirsWithKey(ns, t, touched)
         .join(marks,
           col("__graft_file") === col("_dv_file") &&
@@ -1238,7 +1179,7 @@ final class LakeCatalog(
       inserts.map(_.withColumn("_change", lit("insert"))) ++
         deletes.map(_.withColumn("_change", lit("delete")))
     if (tagged.isEmpty)
-      read(ns, t, Some(toV)).limit(0).withColumn("_change", lit(""))
+      readSnapshot(ns, t, afterSnap).limit(0).withColumn("_change", lit(""))
     // column-set mismatch across scoped branches (odd layouts): the full
     // unified diff owns those semantics
     else if (tagged.map(_.columns.toSet).distinct.length > 1) full()
@@ -1254,42 +1195,23 @@ final class LakeCatalog(
         org.apache.spark.sql.types.StructField("_dv_pos",
           org.apache.spark.sql.types.LongType))))
 
-  /** The commit dirs ADDED between two snapshots when the history is
-    * append-only in that window (the old entry list survives intact into
-    * the new one) — a pure METADATA answer. None when entries were
-    * removed or rewritten in between (overwrite/delete/compaction), i.e.
-    * when "what changed" genuinely requires a data diff.
-    */
-  private[lake] def appendedEntries(
-      ns: String, t: String, fromV: Int, toV: Int): Option[Seq[String]] = {
-    // txn watermark lines move on every idempotent append — they are sink
-    // metadata, not data, so the append-only test ignores them (otherwise
-    // every streaming-sink table would lose the metadata fast path)
-    val before = manifestEntries(ns, t, fromV)
-      .filterNot(e => e.startsWith("txn/") || e.startsWith("col/"))
-    val after = manifestEntries(ns, t, toV)
-      .filterNot(e => e.startsWith("txn/") || e.startsWith("col/"))
-    val added = after.filterNot(before.toSet)
-    // an added deletion vector is a logical DELETE, not an append — the
-    // window then needs a real diff, same as a rewrite
-    if (before.forall(after.contains) && dvRels(added).isEmpty) Some(added)
-    else None
-  }
-
   /** Rows ADDED between two snapshots at METADATA+delta cost when the
-    * window is append-only: reads ONLY the commit dirs added after
-    * `fromV`, never the base data. Falls back to [[readIncremental]]
-    * (which diffs both snapshots) when the window saw rewrites. This is
-    * the path incremental consumers should prefer — on a 100 TB
-    * append-heavy table the delta read costs the new commits' IO, not
-    * the table's.
+    * window is append-only ([[Snapshot.Diff.appendOnly]]: txn marks and
+    * column declarations move freely, but a removed dir or a changed
+    * deletion vector is a logical delete): reads ONLY the commit dirs
+    * added after `fromV`, never the base data. Falls back to
+    * [[readIncremental]] (which diffs both snapshots) when the window saw
+    * rewrites. This is the path incremental consumers should prefer — on
+    * a 100 TB append-heavy table the delta read costs the new commits'
+    * IO, not the table's.
     */
-  def readAppended(ns: String, t: String, fromV: Int, toV: Int): DataFrame =
-    appendedEntries(ns, t, fromV, toV) match {
-      case Some(Nil) => read(ns, t, Some(toV)).limit(0)
-      case Some(added) => readDirs(ns, t, added)
-      case None => readIncremental(ns, t, fromV, toV)
-    }
+  def readAppended(ns: String, t: String, fromV: Int, toV: Int): DataFrame = {
+    val after = snapshot(ns, t, Some(toV))
+    val diff = snapshot(ns, t, Some(fromV)).diff(after)
+    if (!diff.appendOnly) readIncremental(ns, t, fromV, toV)
+    else if (diff.added.isEmpty) readSnapshot(ns, t, after).limit(0)
+    else readDirs(ns, t, diff.added)
+  }
 
   // ----- small per-table metadata sidecars --------------------------------
   // Named auxiliary state that belongs to a table but not to any commit
@@ -1330,13 +1252,12 @@ final class LakeCatalog(
     * commits exist (nothing to fold).
     */
   def compactSmall(ns: String, t: String, smallRowThreshold: Long): Int = {
-    val (base, rels) = latestEntries(ns, t)
-    val small = dataRels(rels).filter { rel =>
+    val snap = snapshot(ns, t)
+    val small = snap.data.filter { rel =>
       commitStats(ns, t, rel).map(_._1).exists(_ < smallRowThreshold)
     }
-    if (small.length < 2) base
-    else commitRewrite(ns, t, base, small.toSet,
-      readDirsClean(ns, t, rels, small))
+    if (small.length < 2) snap.version
+    else commitRewrite(ns, t, snap, small.toSet, readDirsClean(ns, t, snap, small))
   }
 
   /** Re-cluster the current snapshot ([[writeClustered]] of the full
@@ -1352,9 +1273,9 @@ final class LakeCatalog(
     // CAS against the snapshot being reclustered: a concurrent commit
     // (e.g. the streaming upsert sink) landing mid-recluster must raise,
     // not be silently clobbered by the reclustered copy of older data
-    val (base, _) = latestEntries(ns, t)
-    writeClustered(ns, t, read(ns, t, Some(base)), clusterCols, commits,
-      SaveMode.Overwrite, expectedVersion = Some(base))
+    val snap = snapshot(ns, t)
+    writeClustered(ns, t, readSnapshot(ns, t, snap), clusterCols, commits,
+      SaveMode.Overwrite, expectedVersion = Some(snap.version))
   }
 
   /** Snapshot ROLLBACK (Iceberg rollback_to_snapshot analog): republish
@@ -1367,7 +1288,7 @@ final class LakeCatalog(
     val vs = versions(ns, t)
     require(vs.contains(toVersion),
       s"no snapshot v$toVersion of $ns.$t (have: ${vs.mkString(",")})")
-    commit(ns, t, manifestEntries(ns, t, toVersion), Some(vs.last))
+    commit(ns, t, snapshot(ns, t, Some(toVersion)).entries, Some(vs.last))
   }
 
   /** Predicate DELETE, FILE-SCOPED copy-on-write (Iceberg `DELETE FROM`
@@ -1386,14 +1307,11 @@ final class LakeCatalog(
     // NULL-predicate rows are KEPT (SQL DELETE semantics): a row only
     // leaves when the predicate is definitively TRUE.
     val hit = coalesce(predicate, lit(false))
-    val (base, rels) = latestEntries(ns, t)
-    val (tagged, tag) = readTagged(ns, t, dataRels(rels))
-    val touched = tagged
-      .filter(hit).select(tag).distinct()
-      .collect().map(_.getString(0)).toSet
-    if (touched.isEmpty) commit(ns, t, rels, Some(base))
-    else commitRewrite(ns, t, base, touched,
-      readDirsClean(ns, t, rels, rels.filter(touched)).filter(!hit))
+    val snap = snapshot(ns, t)
+    val touched = touchedBy(ns, t, snap, hit)
+    if (touched.isEmpty) commit(ns, t, snap.entries, Some(snap.version))
+    else commitRewrite(ns, t, snap, touched,
+      readDirsClean(ns, t, snap, snap.data.filter(touched)).filter(!hit))
   }
 
   /** Predicate UPDATE, FILE-SCOPED copy-on-write (the Delta/Iceberg
@@ -1418,14 +1336,11 @@ final class LakeCatalog(
     require(set.map(_._1).distinct.size == set.size,
       s"duplicate SET column in: ${set.map(_._1).mkString(", ")}")
     val hit = coalesce(predicate, lit(false))
-    val (base, rels) = latestEntries(ns, t)
-    val (tagged, tag) = readTagged(ns, t, dataRels(rels))
-    val touched = tagged
-      .filter(hit).select(tag).distinct()
-      .collect().map(_.getString(0)).toSet
-    if (touched.isEmpty) commit(ns, t, rels, Some(base))
+    val snap = snapshot(ns, t)
+    val touched = touchedBy(ns, t, snap, hit)
+    if (touched.isEmpty) commit(ns, t, snap.entries, Some(snap.version))
     else {
-      val src = readDirsClean(ns, t, rels, rels.filter(touched))
+      val src = readDirsClean(ns, t, snap, snap.data.filter(touched))
       val assigned = set.toMap
       val missing = assigned.keySet -- src.columns.toSet
       require(missing.isEmpty,
@@ -1436,8 +1351,17 @@ final class LakeCatalog(
           case None => col(f.name)
         }
       }: _*)
-      commitRewrite(ns, t, base, touched, updated)
+      commitRewrite(ns, t, snap, touched, updated)
     }
+  }
+
+  /** The scan-to-plan pass of [[delete]] and [[update]]: the data dirs of
+    * `snap` holding a row that `hit` selects.
+    */
+  private def touchedBy(ns: String, t: String, snap: Snapshot,
+      hit: org.apache.spark.sql.Column): Set[String] = {
+    val (tagged, tag) = readTagged(ns, t, snap, snap.data)
+    tagged.filter(hit).select(tag).distinct().collect().map(_.getString(0)).toSet
   }
 
   /** Incremental read: rows ADDED between two snapshots — the consumer-side
@@ -1451,26 +1375,26 @@ final class LakeCatalog(
 
   /** Snapshot expiry + vacuum (Iceberg expire_snapshots / Delta VACUUM
     * analog): drop all but the newest `keepLast` manifests, then delete
-    * every data dir no surviving manifest references. Bounds metadata AND
-    * storage growth — the retention half of table maintenance (compact() is
-    * the read-amplification half). Returns the number of data dirs removed.
+    * every data dir no surviving manifest or branch tip references. Bounds
+    * metadata AND storage growth — the retention half of table maintenance
+    * (compact() is the read-amplification half). Returns the number of
+    * data dirs removed.
     */
   def expireSnapshots(ns: String, t: String, keepLast: Int = 1): Int = {
     require(keepLast >= 1, "must keep at least the current snapshot")
     val vs = versions(ns, t)
     require(vs.nonEmpty, s"no such table: $ns.$t")
-    val tagged = listTags(ns, t).values.toSet
-    // tagged snapshots are retention-protected (the Iceberg refs rule:
-    // expiry never removes a snapshot a tag can still reach)
+    // snapshots a ref reaches are retention-protected (the Iceberg refs
+    // rule): tagged ones, and each branch's base — the branch reads it
+    // until its first commit
+    val branches = listBranches(ns, t)
+    val pinned = listTags(ns, t).values.toSet ++ branches.values.map(_._1)
     val (old, kept0) = vs.splitAt(math.max(0, vs.length - keepLast))
-    val (protectedVs, expired) = old.partition(tagged)
+    val (protectedVs, expired) = old.partition(pinned)
     val kept = protectedVs ++ kept0
-    val keptDirs = kept.flatMap(v => manifestEntries(ns, t, v)).toSet
-    // txn watermark and declared-column lines are not dirs — nothing on
-    // disk to reclaim
-    val expiredDirs =
-      (expired.flatMap(v => manifestEntries(ns, t, v)).toSet -- keptDirs)
-        .filterNot(e => e.startsWith("txn/") || e.startsWith("col/"))
+    val keptDirs = (kept.map(v => snapshot(ns, t, Some(v))) ++
+      branches.keys.map(branchSnapshot(ns, t, _))).flatMap(_.dirs).toSet
+    val expiredDirs = expired.flatMap(v => snapshot(ns, t, Some(v)).dirs).toSet -- keptDirs
     expired.foreach(v => backend.delete(manifestFile(ns, t, v)))
     expiredDirs.foreach(rel => deleteRec(new Path(tPath(ns, t), rel)))
     expiredDirs.size
@@ -1561,19 +1485,29 @@ final class LakeCatalog(
       .filter(_.matches(s"b$name-v\\d+\\.txt"))
       .map(_.stripPrefix(s"b$name-v").stripSuffix(".txt").toInt).sorted
 
-  private def branchEntries(ns: String, t: String, name: String): Seq[String] =
+  /** The branch tip: its latest commit, or the base snapshot before the
+    * first one.
+    */
+  private def branchSnapshot(ns: String, t: String, name: String): Snapshot =
     branchVersions(ns, t, name).lastOption match {
-      case Some(v) =>
-        new String(backend.readBytes(branchManifest(ns, t, name, v)),
-          StandardCharsets.UTF_8)
-          .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-      case None => manifestEntries(ns, t, branchBase(ns, t, name))
+      case Some(v) => load(branchManifest(ns, t, name, v), v)
+      case None => snapshot(ns, t, Some(branchBase(ns, t, name)))
     }
+
+  /** Publish `entries` as the branch's next commit; None when a concurrent
+    * branch writer published that commit first.
+    */
+  private def commitBranch(ns: String, t: String, name: String,
+      entries: Seq[String]): Option[Int] = {
+    val v = branchVersions(ns, t, name).lastOption.getOrElse(0) + 1
+    if (publish(branchManifest(ns, t, name, v), s"b$name-v$v", Snapshot(v, entries))) Some(v)
+    else None
+  }
 
   /** Read the branch tip (branch commits + the base snapshot under them). */
   def readBranch(ns: String, t: String, name: String): DataFrame = {
-    val entries = branchEntries(ns, t, name)
-    readDirsClean(ns, t, entries, dataRels(entries))
+    val snap = branchSnapshot(ns, t, name)
+    readDirsClean(ns, t, snap, snap.data)
   }
 
   /** Commit to the branch: stages a data dir exactly like a main write,
@@ -1587,21 +1521,13 @@ final class LakeCatalog(
     val staged = stageWrite(ns, t, df, mode, partitionBy)
     val entries = mode match {
       case SaveMode.Overwrite => Seq(staged.rel)
-      case _ => branchEntries(ns, t, name) :+ staged.rel
+      case _ => branchSnapshot(ns, t, name).entries :+ staged.rel
     }
-    val v = branchVersions(ns, t, name).lastOption.getOrElse(0) + 1
-    val target = branchManifest(ns, t, name, v)
-    val tmp = new Path(manifestDir(ns, t),
-      s".b$name-v$v-${java.util.UUID.randomUUID().toString}.tmp")
-    backend.writeBytes(tmp,
-      entries.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    if (!backend.renameIfAbsent(tmp, target)) {
-      backend.delete(tmp)
+    commitBranch(ns, t, name, entries).getOrElse {
       abortStaged(staged)
       throw new CommitConflictException(
-        s"concurrent writer published branch $name v$v of $ns.$t first")
+        s"concurrent writer published a commit of branch $name of $ns.$t first")
     }
-    v
   }
 
   /** Fast-forward merge: publish the branch tip as the next MAIN snapshot,
@@ -1612,7 +1538,7 @@ final class LakeCatalog(
     */
   def fastForwardBranch(ns: String, t: String, name: String): Int = {
     val base = branchBase(ns, t, name)
-    val v = commit(ns, t, branchEntries(ns, t, name), Some(base))
+    val v = commit(ns, t, branchSnapshot(ns, t, name).entries, Some(base))
     dropBranch(ns, t, name)
     v
   }
@@ -1898,17 +1824,13 @@ final class LakeCatalog(
       lo: Any,
       hi: Any,
       version: Option[Int] = None): DataFrame = {
-    val vs = versions(ns, t)
-    require(vs.nonEmpty, s"no such table: $ns.$t")
-    val v = version.getOrElse(vs.last)
-    val entries = manifestEntries(ns, t, v)
-    val kept = dataRels(entries)
-      .filter(rel => statsMayOverlap(ns, t, rel, column, lo, hi))
+    val snap = snapshot(ns, t, version)
+    val kept = snap.data.filter(rel => statsMayOverlap(ns, t, rel, column, lo, hi))
     val base =
       if (kept.isEmpty)
         // every commit pruned: an empty frame with the table's schema
-        read(ns, t, Some(v)).limit(0)
-      else readDirsClean(ns, t, entries, kept)
+        readSnapshot(ns, t, snap).limit(0)
+      else readDirsClean(ns, t, snap, kept)
     import org.apache.spark.sql.functions.{col => c, lit}
     base.filter(c(column) >= lit(lo) && c(column) <= lit(hi))
   }
@@ -1931,9 +1853,7 @@ final class LakeCatalog(
     */
   def buildBlooms(ns: String, t: String, column: String,
       expectedItems: Long = 1000000L, fpp: Double = 0.01): Int = {
-    val (_, rels0) = latestEntries(ns, t)
-    val rels = dataRels(rels0)
-    val missing = rels.filterNot(rel => fs.exists(bloomFile(ns, t, rel, column)))
+    val missing = snapshot(ns, t).data.filterNot(rel => fs.exists(bloomFile(ns, t, rel, column)))
     missing.foreach { rel =>
       val df = readDirs(ns, t, Seq(rel))
       val n = commitStats(ns, t, rel).map(_._1).getOrElse(expectedItems)
@@ -1964,11 +1884,7 @@ final class LakeCatalog(
   def readWhereIn(ns: String, t: String, column: String,
       values: Seq[Any], version: Option[Int] = None): DataFrame = {
     require(values.nonEmpty, "need at least one lookup value")
-    val vs = versions(ns, t)
-    require(vs.nonEmpty, s"no such table: $ns.$t")
-    val v = version.getOrElse(vs.last)
-    val entries = manifestEntries(ns, t, v)
-    val rels = dataRels(entries)
+    val snap = snapshot(ns, t, version)
 
     def inRange(kind: String, mn: String, mx: String, x: Any): Boolean =
       if (kind == "num") {
@@ -1995,7 +1911,7 @@ final class LakeCatalog(
       case _ => true // double/date/...: not bloom-testable, scan the commit
     }
 
-    val kept = rels.filter { rel =>
+    val kept = snap.data.filter { rel =>
       commitColumnRange(ns, t, rel, column) match {
         case None => true // pre-stats commit or uncovered column
         case Some((kind, mn, mx)) =>
@@ -2008,19 +1924,23 @@ final class LakeCatalog(
     }
     import org.apache.spark.sql.functions.{col => c, lit}
     val base =
-      if (kept.isEmpty) read(ns, t, Some(v)).limit(0)
-      else readDirsClean(ns, t, entries, kept)
+      if (kept.isEmpty) readSnapshot(ns, t, snap).limit(0)
+      else readDirsClean(ns, t, snap, kept)
     base.filter(c(column).isin(values.map(lit): _*))
   }
 
-  /** Delete data dirs referenced by NO manifest — the staging debris of
-    * commits that lost their CAS (expireSnapshots only reclaims dirs that
-    * expired manifests referenced; a loser's dir never made any manifest).
-    * `graceMs` shields writers that have staged data but not yet committed.
-    * Returns the number of dirs removed.
+  /** Delete data dirs referenced by NO manifest, main or branch — the
+    * staging debris of commits that lost their CAS (expireSnapshots only
+    * reclaims dirs that expired manifests referenced; a loser's dir never
+    * made any manifest) and of dropped branches. `graceMs` shields writers
+    * that have staged data but not yet committed. Returns the number of
+    * dirs removed.
     */
   def vacuumOrphans(ns: String, t: String, graceMs: Long = 3600000L): Int = {
-    val referenced = versions(ns, t).flatMap(v => manifestEntries(ns, t, v)).toSet
+    val referenced = backend.list(manifestDir(ns, t)).collect {
+      case n @ (LakeCatalog.ManifestName(_) | LakeCatalog.BranchManifestName()) =>
+        load(new Path(manifestDir(ns, t), n), 0)
+    }.flatMap(_.dirs).toSet
     val now = System.currentTimeMillis()
     // deletion-vector dirs are reclaimed by the same rule as data dirs
     // (a pruned/rewritten vector's old dir loses its last reference)
@@ -2074,6 +1994,7 @@ object LakeCatalog {
   }
 
   private val ManifestName = """v(\d+)\.txt""".r
+  private val BranchManifestName = """b.+-v\d+\.txt""".r
 
   private val TsKey = "spark.sql.parquet.outputTimestampType"
   // session -> (nesting depth, conf value before the first writer entered)

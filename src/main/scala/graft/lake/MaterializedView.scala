@@ -104,8 +104,7 @@ final class MaterializedView(catalog: LakeCatalog) {
     catalog.versions(mvNs, mvT).reverse.iterator
       .flatMap { v =>
         probed += 1
-        catalog.manifestEntries(mvNs, mvT, v).reverseIterator
-          .filter(_.startsWith("data/"))
+        catalog.snapshot(mvNs, mvT, Some(v)).data.reverseIterator
           .flatMap(rel => catalog.getTableMeta(mvNs, mvT, seenMetaForRel(rel)))
           .nextOption()
           .orElse(catalog.getTableMeta(mvNs, mvT, legacySeenMetaName(v)))
@@ -204,7 +203,7 @@ final class MaterializedView(catalog: LakeCatalog) {
       keys: Seq[String], aggs: Seq[MvAgg],
       countAs: String = "mv_count"): Int = {
     require(keys.nonEmpty, "need at least one group-by key")
-    val (baseV, _) = catalog.latestEntries(baseNs, baseT)
+    val baseV = catalog.snapshot(baseNs, baseT).version
     val spec = Spec(baseNs, baseT, baseV, keys, aggs, countAs)
     val v = catalog.write(mvNs, mvT, aggregate(
       catalog.read(baseNs, baseT, Some(baseV)), spec))
@@ -220,10 +219,12 @@ final class MaterializedView(catalog: LakeCatalog) {
   def refresh(mvNs: String, mvT: String): Int = {
     val spec = readSpec(mvNs, mvT)
     val seen = currentSeen(mvNs, mvT, spec)
-    val (baseV, _) = catalog.latestEntries(spec.baseNs, spec.baseT)
+    val base = catalog.snapshot(spec.baseNs, spec.baseT)
+    val baseV = base.version
     if (baseV == seen)
       return catalog.versions(mvNs, mvT).last
-    val (mvV, mvEntries) = catalog.latestEntries(mvNs, mvT)
+    val mv = catalog.snapshot(mvNs, mvT)
+    val mvV = mv.version
     // stage the data dir first, key the cursor by ITS uuid, then CAS the
     // manifest — see the race analysis on seenMetaForRel. The CAS is
     // pinned to mvV (the version the merge READ), not the stage-time
@@ -239,27 +240,24 @@ final class MaterializedView(catalog: LakeCatalog) {
         throw e
       }
     }
-    catalog.appendedEntries(spec.baseNs, spec.baseT, seen, baseV) match {
-      case Some(added) =>
-        if (added.isEmpty) {
-          // base moved but added no data (metadata-only commits): advance
-          // the cursor alone — overwrite the CURRENT committed dir's
-          // sidecar in place (safe: a metadata-only advance is a verified
-          // "this window appended nothing" claim, so concurrent advances
-          // may land in either order; a concurrent DATA refresh commits a
-          // new version whose fresh dir-keyed cursor shadows this one)
-          mvEntries.find(_.startsWith("data/")) match {
-            case Some(rel) =>
-              catalog.putTableMeta(mvNs, mvT, seenMetaForRel(rel), baseV.toString)
-            case None =>
-              catalog.putTableMeta(mvNs, mvT, legacySeenMetaName(mvV), baseV.toString)
-          }
-          mvV
-        } else cursorThenWrite(merge(catalog.read(mvNs, mvT, Some(mvV)),
-          aggregate(catalog.readDirs(spec.baseNs, spec.baseT, added), spec), spec))
-      case None =>
-        cursorThenWrite(aggregate(
-          catalog.read(spec.baseNs, spec.baseT, Some(baseV)), spec))
-    }
+    val window = catalog.snapshot(spec.baseNs, spec.baseT, Some(seen)).diff(base)
+    if (!window.appendOnly)
+      cursorThenWrite(aggregate(catalog.read(spec.baseNs, spec.baseT, Some(baseV)), spec))
+    else if (window.added.isEmpty) {
+      // base moved but added no data (metadata-only commits): advance
+      // the cursor alone — overwrite the CURRENT committed dir's
+      // sidecar in place (safe: a metadata-only advance is a verified
+      // "this window appended nothing" claim, so concurrent advances
+      // may land in either order; a concurrent DATA refresh commits a
+      // new version whose fresh dir-keyed cursor shadows this one)
+      mv.data.headOption match {
+        case Some(rel) =>
+          catalog.putTableMeta(mvNs, mvT, seenMetaForRel(rel), baseV.toString)
+        case None =>
+          catalog.putTableMeta(mvNs, mvT, legacySeenMetaName(mvV), baseV.toString)
+      }
+      mvV
+    } else cursorThenWrite(merge(catalog.read(mvNs, mvT, Some(mvV)),
+      aggregate(catalog.readDirs(spec.baseNs, spec.baseT, window.added), spec), spec))
   }
 }

@@ -261,11 +261,11 @@ final class TableMerger(
       sourceRows: Long, tombstones: Option[DataFrame] = None): Unit = {
     import org.apache.spark.sql.functions.{max => fmax, min => fmin}
     val k = ks.head // stats pruning is per-column; `k` drives the exact test
-    val (base, entries) = catalog.latestEntries(ns, table)
+    val snap = catalog.snapshot(ns, table)
     // deletion-vector entries are not data: candidates come from the data
     // dirs only, and the plan/rewrite reads subtract the vectors so a
     // logically-deleted row can neither select a commit nor be resurrected
-    val rels = catalog.dataRels(entries)
+    val rels = snap.data
     // the deduped delta feeds FOUR consumers (key collect / bounds, plan
     // semi-join, rewrite anti-join, rewrite union) — pin it once instead
     // of re-running the dedupe window per job
@@ -411,7 +411,7 @@ final class TableMerger(
       val touched: Set[String] =
         if (candidates.isEmpty) Set.empty
         else {
-          val (tagged, tag) = catalog.readTagged(ns, table, candidates)
+          val (tagged, tag) = catalog.readTagged(ns, table, snap, candidates)
           tagged.join(keys, ks, "left_semi")
             .select(tag).distinct().collect().map(_.getString(0)).toSet
         }
@@ -421,10 +421,10 @@ final class TableMerger(
       // Untouched commits keep their manifest entries verbatim.
       val kept =
         if (touched.isEmpty) deduped.limit(0) // pure insert: delta's schema
-        else catalog.readDirsClean(ns, table, entries, rels.filter(touched))
+        else catalog.readDirsClean(ns, table, snap, rels.filter(touched))
           .join(keys, ks, "left_anti")
       val merged = kept.unionByName(deduped, allowMissingColumns = true)
-      catalog.commitRewrite(ns, table, base, touched, merged)
+      catalog.commitRewrite(ns, table, snap, touched, merged)
       ()
     } finally { deduped.unpersist(); () }
   }

@@ -269,8 +269,30 @@ final class LakeStreamSource(
 
   /** Sorted data dirs + DV presence of one full snapshot. */
   private def snapshotDirs(v: Int): (Seq[String], Boolean) = {
-    val (data, dvs) = catalog.snapshotEntries(ns, table, v)
-    (data.sorted, dvs.nonEmpty)
+    val s = catalog.snapshot(ns, table, Some(v))
+    (s.data.sorted, s.dvs.nonEmpty)
+  }
+
+  /** What window (sv, ev] changed; sv = 0 diffs from the empty table. */
+  private def windowDiff(sv: Int, ev: Int): graft.lake.Snapshot.Diff = {
+    val older = if (sv == 0) graft.lake.Snapshot.empty else catalog.snapshot(ns, table, Some(sv))
+    older.diff(catalog.snapshot(ns, table, Some(ev)))
+  }
+
+  /** The data dirs window (sv, ev] added. A window that removed dirs or
+    * changed deletion vectors cannot stream as appends: refused unless
+    * `ignoreChanges`.
+    */
+  private def appendedDirs(sv: Int, ev: Int): Seq[String] = {
+    val d = windowDiff(sv, ev)
+    if (!d.appendOnly && !ignoreChanges)
+      throw new IllegalStateException(
+        s"$ns.$table window (v$sv, v$ev] is not append-only " +
+          s"(${d.removed.size} dirs removed, dvChanged=${d.dvsChanged}): an " +
+          "overwrite/delete/compaction cannot stream as appends. Set " +
+          "ignoreChanges=true to stream added dirs anyway (removed rows " +
+          "will be silently absent), or stream from a snapshot boundary.")
+    d.added
   }
 
   /** Sorted dirs ADDED by version v over its predecessor. Guards the
@@ -285,10 +307,7 @@ final class LakeStreamSource(
       s"snapshot window for v$v of $ns.$table has been expired; restart " +
         "from a fresh checkpoint (and align snapshot retention with the " +
         "longest consumer downtime)")
-    val oldData =
-      if (v == 1) Seq.empty[String] else catalog.snapshotEntries(ns, table, v - 1)._1
-    val (newData, _) = catalog.snapshotEntries(ns, table, v)
-    newData.filterNot(oldData.toSet).sorted
+    windowDiff(v - 1, v).added.sorted
   }
 
   /** One admission unit of a sliceable window: a commit dir with its file
@@ -393,16 +412,7 @@ final class LakeStreamSource(
     }
   }
 
-  private val trace = sys.env.get("GRAFT_TRACE_SOURCE").contains("1")
-  private def tr[T](label: String)(f: => T): T =
-    if (!trace) f else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[src-trace] $label%-32s ${(System.nanoTime() - t0) / 1e9}%7.3fs")
-      r
-    }
-
-  override def getBatch(start: Option[OffsetV1], end: OffsetV1): DataFrame = tr("getBatch") {
+  override def getBatch(start: Option[OffsetV1], end: OffsetV1): DataFrame = {
     val endP = parsePos(end)
     highPos = Seq(highPos, endP).max
     val startP = start.map(parsePos)
@@ -416,9 +426,9 @@ final class LakeStreamSource(
           .withColumn("_change", lit("insert"))))
       case None =>
         // initial snapshot: the full table at endV, DVs applied
-        val (_, dvs) = catalog.snapshotEntries(ns, table, endV)
         val df = align(catalog.read(ns, table, Some(endV)))
-        if (dvs.isEmpty) tagStreaming(df) else wrapOpaque(df)
+        if (catalog.snapshot(ns, table, Some(endV)).dvs.isEmpty) tagStreaming(df)
+        else wrapOpaque(df)
       case Some(sv) if sv >= endV => emptyBatch
       case Some(sv) =>
         val vs = catalog.versions(ns, table)
@@ -432,28 +442,12 @@ final class LakeStreamSource(
           // windows of any shape stream as the file-scoped snapshot diff
           // (the changelog plan carries exceptAll/anti-joins — opaque wrap,
           // like the DV initial snapshot; cost = changed commits' IO)
-          val diff = tr("changelog-plan") {
-            align(
-              if (sv == 0) catalog.read(ns, table, Some(endV))
-                .withColumn("_change", lit("insert"))
-              else catalog.changelog(ns, table, sv, endV))
-          }
-          return tr("wrapOpaque") { wrapOpaque(diff) }
+          return wrapOpaque(align(
+            if (sv == 0) catalog.read(ns, table, Some(endV))
+              .withColumn("_change", lit("insert"))
+            else catalog.changelog(ns, table, sv, endV)))
         }
-        val (oldData, oldDvs) =
-          if (sv == 0) (Seq.empty[String], Seq.empty[String])
-          else catalog.snapshotEntries(ns, table, sv)
-        val (newData, newDvs) = catalog.snapshotEntries(ns, table, endV)
-        val removed = oldData.filterNot(newData.toSet)
-        val dvChanged = oldDvs.toSet != newDvs.toSet
-        if ((removed.nonEmpty || dvChanged) && !ignoreChanges)
-          throw new IllegalStateException(
-            s"$ns.$table window (v$sv, v$endV] is not append-only " +
-              s"(${removed.size} dirs removed, dvChanged=$dvChanged): an " +
-              "overwrite/delete/compaction cannot stream as appends. Set " +
-              "ignoreChanges=true to stream added dirs anyway (removed rows " +
-              "will be silently absent), or stream from a snapshot boundary.")
-        val added = newData.filterNot(oldData.toSet)
+        val added = appendedDirs(sv, endV)
         if (added.isEmpty) emptyBatch
         else tagStreaming(align(catalog.readCommitDirs(ns, table, added)))
     }
@@ -490,16 +484,7 @@ final class LakeStreamSource(
         require(vs.contains(v) && (v == 1 || vs.contains(v - 1)),
           s"snapshot window for v$v of $ns.$table has been expired; restart " +
             "from a fresh checkpoint")
-        val (oldData, oldDvs) = catalog.snapshotEntries(ns, table, v - 1)
-        val (newData, newDvs) = catalog.snapshotEntries(ns, table, v)
-        val removed = oldData.filterNot(newData.toSet)
-        val dvChanged = oldDvs.toSet != newDvs.toSet
-        if ((removed.nonEmpty || dvChanged) && !ignoreChanges)
-          throw new IllegalStateException(
-            s"$ns.$table window (v${v - 1}, v$v] is not append-only " +
-              s"(${removed.size} dirs removed, dvChanged=$dvChanged): set " +
-              "ignoreChanges=true or stream from a snapshot boundary.")
-        (newData.filterNot(oldData.toSet).sorted, false)
+        (appendedDirs(v - 1, v).sorted, false)
       }
     val toD = if (endP.d >= 0) endP.d else dirs.size
     val toF = if (endP.d >= 0) endP.f else 0
@@ -578,16 +563,9 @@ final class LakeStreamSource(
     * leaves would make the incremental planner treat it as a stream-stream
     * join). One-time cost at stream start only.
     */
-  private def wrapOpaque(df: DataFrame): DataFrame = {
-    if (trace) {
-      tr("  wrap.analyzed") { df.queryExecution.analyzed }
-      tr("  wrap.optimized") { df.queryExecution.optimizedPlan }
-      tr("  wrap.sparkPlan") { df.queryExecution.sparkPlan }
-      tr("  wrap.executedPlan") { df.queryExecution.executedPlan }
-    }
+  private def wrapOpaque(df: DataFrame): DataFrame =
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(df.queryExecution.toRdd, schema, isStreaming = true)
-  }
 
   private def emptyBatch: DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(

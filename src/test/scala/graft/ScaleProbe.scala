@@ -477,7 +477,7 @@ object ScaleProbe {
           spark.range(i * rowsPerCommit, (i + 1) * rowsPerCommit)
             .select(col("id"), (col("id") * 2).as("v")),
           SaveMode.Append)
-      val (_, before) = cat.latestEntries("p", "t")
+      val before = cat.snapshot("p", "t").entries
       // 1000 updates inside commit 0's range + 10 brand-new keys
       val delta = spark.range(0L, 1000L).select(col("id"), lit(-1L).as("v"))
         .unionByName(spark.range(k * rowsPerCommit, k * rowsPerCommit + 10)
@@ -486,7 +486,7 @@ object ScaleProbe {
       val t0 = System.nanoTime()
       merger.mergeTable(delta, "p", "t")
       val dt = (System.nanoTime() - t0) / 1e9
-      val (_, after) = cat.latestEntries("p", "t")
+      val after = cat.snapshot("p", "t").entries
       val replaced = before.toSet -- after.toSet
       println(f"[scale] file-merge commits=$k%d rows=${k * rowsPerCommit}%d " +
         f"replaced=${replaced.size}%d time=$dt%.1fs")
@@ -515,7 +515,7 @@ object ScaleProbe {
       val t1 = System.nanoTime()
       val remaining = cat.read("p", "t").count()
       val tRead = (System.nanoTime() - t1) / 1e9
-      val (_, entries) = cat.latestEntries("p", "t")
+      val entries = cat.snapshot("p", "t").entries
       println(f"[scale] mor-delete commits=$k%d rows=${k * rowsPerCommit}%d " +
         f"remaining=$remaining%d dvs=${entries.count(_.startsWith("dv/"))}%d " +
         f"base_read=$tBase%.1fs delete=$tDel%.1fs read=$tRead%.1fs")

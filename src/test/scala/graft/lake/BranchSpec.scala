@@ -89,6 +89,32 @@ class BranchSpec extends SparkSpec {
     intercept[RuntimeException] { cat.branchBase("br", "t", "dev") }
   }
 
+  test("vacuum keeps the data dirs a live branch's commits reference") {
+    import spark.implicits._
+    val cat = freshCatalog()
+    cat.write("br", "t", (1 to 10).map(i => (i.toLong, i * 1.0)).toDF("id", "x"))
+    cat.createBranch("br", "t", "dev")
+    cat.writeBranch("br", "t", "dev", (11 to 20).map(i => (i.toLong, i * 1.0)).toDF("id", "x"))
+    assert(cat.vacuumOrphans("br", "t", graceMs = 0L) == 0)
+    assert(cat.readBranch("br", "t", "dev").count() == 20)
+  }
+
+  test("snapshot expiry keeps branch bases and the dirs branch tips list") {
+    import spark.implicits._
+    val cat = freshCatalog()
+    cat.write("br", "t", (1 to 10).map(i => (i.toLong, i * 1.0)).toDF("id", "x"))
+    cat.createBranch("br", "t", "dev", Some(1))
+    cat.createBranch("br", "t", "idle", Some(1)) // no commits: reads its base
+    cat.writeBranch("br", "t", "dev", (11 to 20).map(i => (i.toLong, i * 1.0)).toDF("id", "x"))
+    cat.write("br", "t", (100 to 102).map(i => (i.toLong, i * 1.0)).toDF("id", "x"),
+      SaveMode.Overwrite)
+    cat.expireSnapshots("br", "t", keepLast = 1)
+    assert(rows(cat.readBranch("br", "t", "dev").select("id")) ==
+      (1 to 20).map(i => Seq[Any](i.toLong)).toSet)
+    assert(cat.readBranch("br", "t", "idle").count() == 10)
+    assert(cat.read("br", "t").count() == 3)
+  }
+
   test("branch names validate; duplicate branch rejected; missing branch loud") {
     import spark.implicits._
     val cat = freshCatalog()

@@ -131,7 +131,7 @@ class CatalogFileIndexSpec extends SparkSpec {
     cat.write("fb", "t", rows(100, 20, 2).withColumn("extra", col("id") * 2),
       SaveMode.Append)                                                   // added column
     cat.write("fb", "t", rows(120, 20, 2), SaveMode.Append)              // recorded
-    val data = cat.latestEntries("fb", "t")._2
+    val data = cat.snapshot("fb", "t").entries
 
     // commits written before records existed: stats lines only, or no
     // sidecar at all (the local FS checksum file goes with the rewrite)
@@ -178,7 +178,7 @@ class CatalogFileIndexSpec extends SparkSpec {
     val cat = LakeCatalog(spark, root)
     cat.write("sf", "t", rows(0, 40, 4))
     cat.write("sf", "t", rows(40, 40, 4), SaveMode.Append)
-    val Seq(a, b) = cat.latestEntries("sf", "t")._2
+    val Seq(a, b) = cat.snapshot("sf", "t").entries
     def listed(rel: String) =
       new java.io.File(Paths.get(root, "sf", "t", rel).toString).listFiles().toSeq
         .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
@@ -213,7 +213,7 @@ class CatalogFileIndexSpec extends SparkSpec {
     val rels = scanRelations(df)
     assert(rels.size == 1 && rels.head.fileFormat.toString == "Parquet" &&
       rels.head.location.isInstanceOf[GraftFileIndex])
-    val recorded = cat.latestEntries("sr", "dim")._2.flatMap(rel =>
+    val recorded = cat.snapshot("sr", "dim").entries.flatMap(rel =>
       cat.commitFilesIfFlat("sr", "dim", rel).get.map(f => s"${rel.split('/').last}/${f._1}"))
     assert(df.inputFiles.map(_.split('/').takeRight(2).mkString("/")).toSet == recorded.toSet)
     assert(graft.sources.ParquetMeta.scanRowCount(spark, df).contains(300L))

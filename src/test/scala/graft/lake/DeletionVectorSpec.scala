@@ -63,13 +63,12 @@ class DeletionVectorSpec extends SparkSpec {
     cat.write("ns", "t", (101 to 200).map(i => (i, "b")).toDF("id", "v"), SaveMode.Append)
     cat.deleteMoR("ns", "t", col("id") <= 10) // marks rows only in commit 1
     val before = dataDirState(cat, "ns", "t")
-    val (_, preEntries) = cat.latestEntries("ns", "t")
-    val untouchedRel = cat.dataRels(preEntries).last // commit 2: no marks
+    val untouchedRel = cat.snapshot("ns", "t").data.last // commit 2: no marks
 
     cat.materializeDeletes("ns", "t")
-    val (_, postEntries) = cat.latestEntries("ns", "t")
-    assert(cat.dvRels(postEntries).isEmpty, "vectors must be gone after materialize")
-    assert(postEntries.contains(untouchedRel), "unmarked commit keeps its entry verbatim")
+    val post = cat.snapshot("ns", "t")
+    assert(post.dvs.isEmpty, "vectors must be gone after materialize")
+    assert(post.entries.contains(untouchedRel), "unmarked commit keeps its entry verbatim")
     val after = dataDirState(cat, "ns", "t")
     val untouchedFiles = before.keySet.filter(_.startsWith(untouchedRel.stripPrefix("data/")))
     untouchedFiles.foreach { f =>
@@ -96,7 +95,7 @@ class DeletionVectorSpec extends SparkSpec {
     assert(!rows.contains(1) && !rows.contains(5), "vector-deleted rows resurrected by merge")
     assert(rows(6) == "NEW6" && rows(999) == "v999")
     // the merge rewrite replaced the only marked commit → vectors pruned
-    assert(cat.dvRels(cat.latestEntries("ns", "t")._2).isEmpty,
+    assert(cat.snapshot("ns", "t").dvs.isEmpty,
       "vectors referencing a rewritten commit must be pruned")
   }
 
@@ -121,7 +120,7 @@ class DeletionVectorSpec extends SparkSpec {
     mv.create("ns", "view", "ns", "base", Seq("k"),
       Seq(MaterializedView.MvAgg("sum_money", "amt", "total")), countAs = "n")
     cat.deleteMoR("ns", "base", col("amt") === 2.0)
-    assert(cat.appendedEntries("ns", "base", 1, 2).isEmpty,
+    assert(!cat.snapshot("ns", "base", Some(1)).diff(cat.snapshot("ns", "base", Some(2))).appendOnly,
       "a vector commit is a logical delete, not an append")
     mv.refresh("ns", "view")
     val rows = cat.read("ns", "view").collect()
@@ -138,14 +137,13 @@ class DeletionVectorSpec extends SparkSpec {
     cat.deleteMoR("ns", "z", col("id") <= 100)
     assert(cat.read("ns", "z").count() == 1900)
     assert(cat.readWhere("ns", "z", "id", 1, 200).count() == 100)
-    val (_, pre) = cat.latestEntries("ns", "z")
-    val preData = cat.dataRels(pre)
+    val preData = cat.snapshot("ns", "z").data
     cat.materializeDeletes("ns", "z")
-    val (_, post) = cat.latestEntries("ns", "z")
-    assert(cat.dvRels(post).isEmpty)
+    val post = cat.snapshot("ns", "z")
+    assert(post.dvs.isEmpty)
     assert(cat.read("ns", "z").count() == 1900)
     // only z-buckets containing marked rows were rewritten
-    val survivors = preData.toSet.intersect(cat.dataRels(post).toSet)
+    val survivors = preData.toSet.intersect(post.data.toSet)
     assert(survivors.nonEmpty, "unmarked z-bucket entries must survive verbatim")
     // CoW delete on the z table still correct post-materialize
     cat.delete("ns", "z", col("id") === 101)
@@ -196,11 +194,11 @@ class DeletionVectorSpec extends SparkSpec {
       // below the ceiling, opt-in set: delete stays a cheap vector commit
       spark.conf.set("graft.lake.dv.autoMaterialize", "true")
       cat.deleteMoR("ns", "t", col("id") <= 50)
-      assert(cat.latestEntries("ns", "t")._2.exists(_.startsWith("dv/")),
+      assert(cat.snapshot("ns", "t").entries.exists(_.startsWith("dv/")),
         "under-ceiling deletes must stay merge-on-read")
       // past the ceiling: the valve folds ALL vectors in the same call
       cat.deleteMoR("ns", "t", col("id") <= 200)
-      val (_, entries) = cat.latestEntries("ns", "t")
+      val entries = cat.snapshot("ns", "t").entries
       assert(!entries.exists(_.startsWith("dv/")),
         s"valve must fold vectors past the ceiling, entries=$entries")
       assert(cat.read("ns", "t").count() == 800)
@@ -214,7 +212,7 @@ class DeletionVectorSpec extends SparkSpec {
       // opt-out default: same shape WITHOUT the conf keeps vectors
       spark.conf.unset("graft.lake.dv.autoMaterialize")
       cat.deleteMoR("ns", "t", col("id") <= 400)
-      assert(cat.latestEntries("ns", "t")._2.exists(_.startsWith("dv/")),
+      assert(cat.snapshot("ns", "t").entries.exists(_.startsWith("dv/")),
         "without the opt-in conf the valve must stay closed")
     } finally {
       spark.conf.unset("graft.lake.dv.autoMaterialize")

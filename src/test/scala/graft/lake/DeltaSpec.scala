@@ -46,6 +46,19 @@ class DeltaSpec extends SparkSpec {
     assert(rows(imported) == rows(cat.read("dl", "t").select("id", "v", "x")))
   }
 
+  test("ADD COLUMN exports as a metadata-only version: its column line is no data dir") {
+    import spark.implicits._
+    val cat = freshCatalog()
+    cat.write("dl", "t", (1 to 10).map(i => (i.toLong, s"v$i")).toDF("id", "v"))
+    cat.addColumn("dl", "t", "score", org.apache.spark.sql.types.DoubleType)
+    assert(DeltaExport.export(spark, cat, "dl", "t").lastDeltaVersion == 1L)
+    val v1 = logLines(tableLoc(cat, "dl", "t"), 1L)
+    assert(!v1.exists(l => l.contains("\"add\"") || l.contains("\"remove\"")))
+    assert(v1.exists(l => l.contains("\"metaData\"") && l.contains("score")))
+    assert(rows(DeltaImport.read(spark, tableLoc(cat, "dl", "t")).select("id", "v")) ==
+      rows(cat.read("dl", "t").select("id", "v")))
+  }
+
   test("version 0 carries protocol + metaData with the Spark-JSON schemaString") {
     import spark.implicits._
     val cat = freshCatalog()

@@ -114,7 +114,7 @@ class IcebergExportSpec extends SparkSpec {
       }
       // ground truth: the graft manifest's data dirs at this version
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sessionState.newHadoopConf())
-      val expected = cat.dataRels(cat.entriesOf("ice", "t", v)).flatMap { rel =>
+      val expected = cat.snapshot("ice", "t", Some(v)).data.flatMap { rel =>
         val dir = new org.apache.hadoop.fs.Path(s"${cat.root}/ice/t/$rel")
         fs.listStatus(dir).map(_.getPath.getName)
           .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
@@ -123,9 +123,21 @@ class IcebergExportSpec extends SparkSpec {
       val got = fromMeta.map(p => p.substring(p.indexOf("/data/") + 1)).toSet
       assert(got == expected, s"v$v file set mismatch:\n got=$got\n exp=$expected")
       // the dv snapshot's manifest list carries the marked rows as deletes
-      if (cat.dvRels(cat.entriesOf("ice", "t", v)).nonEmpty)
+      if (cat.snapshot("ice", "t", Some(v)).dvs.nonEmpty)
         assert(deleteRows == 10L, s"v$v expected 10 position deletes, got $deleteRows")
     }
+  }
+
+  test("ADD COLUMN snapshot adds no data files and no manifest") {
+    val cat = freshCatalog()
+    import spark.implicits._
+    cat.write("ice", "t", (1 to 10).map(i => (i, s"v$i")).toDF("id", "v"))
+    cat.addColumn("ice", "t", "score", org.apache.spark.sql.types.DoubleType)
+    val m = readJson(IcebergExport.export(spark, cat, "ice", "t").metadataFile)
+    val sn = m.get("snapshots").get(1)
+    assert(sn.get("summary").get("added-data-files").asText() == "0")
+    assert(sn.get("summary").get("total-records").asText() == "10")
+    assert(manifestsOf(sn.get("manifest-list").asText()).size == 1)
   }
 
   test("deletion vectors export as sorted spec-shaped position-delete parquet") {

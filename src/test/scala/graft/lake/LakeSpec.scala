@@ -353,13 +353,13 @@ class LakeSpec extends SparkSpec {
     cat.write("ns", "fs", (1 to 10).map(i => (i, "a")).toDF("id", "v"))                // A: 1..10
     cat.write("ns", "fs", (11 to 20).map(i => (i, "b")).toDF("id", "v"), SaveMode.Append) // B: 11..20
     cat.write("ns", "fs", (21 to 30).map(i => (i, "c")).toDF("id", "v"), SaveMode.Append) // C: 21..30
-    val (v3, rels) = cat.latestEntries("ns", "fs")
+    val Snapshot(v3, rels) = cat.snapshot("ns", "fs")
     assert(v3 == 3 && rels.length == 3)
     val before = rels.map(r => r -> dirFingerprint(cat, "ns", "fs", r)).toMap
     // delta hits only B (key 15) plus a brand-new key beyond every range
     val r = merger.mergeTable(Seq((15, "X"), (35, "new")).toDF("id", "v"), "ns", "fs")
     assert(r.strategy.startsWith("MERGE") && r.finalRows == 31)
-    val (v4, after) = cat.latestEntries("ns", "fs")
+    val Snapshot(v4, after) = cat.snapshot("ns", "fs")
     assert(v4 == 4)
     // A (stats-pruned) and C (range overlap 21..30 vs [15,35] but no actual
     // match) keep their manifest entries VERBATIM; B is replaced
@@ -390,7 +390,7 @@ class LakeSpec extends SparkSpec {
       SaveMode.Append)
     cat.write("ns", "ck", (21 to 30).map(i => (1L, i.toLong, "c")).toDF("id", "sub", "v"),
       SaveMode.Append)
-    val (v3, rels) = cat.latestEntries("ns", "ck")
+    val Snapshot(v3, rels) = cat.snapshot("ns", "ck")
     assert(v3 == 3 && rels.length == 3)
     val before = rels.map(r => r -> dirFingerprint(cat, "ns", "ck", r)).toMap
     // delta: tuple (1,15) updates commit B; (2,15) is brand-new; a duplicate
@@ -400,7 +400,7 @@ class LakeSpec extends SparkSpec {
     val r = merger.mergeTableKeys(delta, "ns", "ck", Seq("id", "sub"))
     assert(r.strategy.contains("keys `id`, `sub`"), r.strategy)
     assert(r.finalRows == 31, r.toString)
-    val (v4, after) = cat.latestEntries("ns", "ck")
+    val Snapshot(v4, after) = cat.snapshot("ns", "ck")
     assert(v4 == 4)
     // A and C prune on the `sub` column's [15,15] bounds (their `id`
     // ranges all overlap) — manifest entries kept verbatim, bytes intact
@@ -423,7 +423,7 @@ class LakeSpec extends SparkSpec {
     val before4 = after.map(rel => rel -> dirFingerprint(cat, "ns", "ck", rel)).toMap
     merger.mergeTableKeys(Seq((1L, 99L, "ins")).toDF("id", "sub", "v"),
       "ns", "ck", Seq("id", "sub"))
-    val (_, after5) = cat.latestEntries("ns", "ck")
+    val after5 = cat.snapshot("ns", "ck").entries
     before4.keys.foreach { rel =>
       assert(after5.contains(rel) &&
         dirFingerprint(cat, "ns", "ck", rel) == before4(rel),
@@ -446,7 +446,7 @@ class LakeSpec extends SparkSpec {
     cat.write("ns", "cdc", (1 to 10).map(i => (i, "a")).toDF("id", "v"))
     cat.write("ns", "cdc", (11 to 20).map(i => (i, "b")).toDF("id", "v"), SaveMode.Append)
     cat.write("ns", "cdc", (21 to 30).map(i => (i, "c")).toDF("id", "v"), SaveMode.Append)
-    val (v3, rels) = cat.latestEntries("ns", "cdc")
+    val Snapshot(v3, rels) = cat.snapshot("ns", "cdc")
     val before = rels.map(r => r -> dirFingerprint(cat, "ns", "cdc", r)).toMap
     // one delta: update key 5, delete key 6 (both commit A), insert key
     // 99, tombstone for an ABSENT key (no-op)
@@ -457,7 +457,7 @@ class LakeSpec extends SparkSpec {
     // exactly ONE new version: update + delete + insert in a single pass
     assert(cat.versions("ns", "cdc") == Seq(1, 2, 3, 4),
       s"one pass must create exactly v${v3 + 1}, have ${cat.versions("ns", "cdc")}")
-    val (_, after) = cat.latestEntries("ns", "cdc")
+    val after = cat.snapshot("ns", "cdc").entries
     // commits B and C hold no matched keys: entries + dirs verbatim
     Seq(rels(1), rels(2)).foreach { rel =>
       assert(after.contains(rel), s"untouched commit $rel must stay")
@@ -536,10 +536,10 @@ class LakeSpec extends SparkSpec {
     import spark.implicits._
     cat.write("ns", "fd", (1 to 10).map(i => (i, i % 2 == 0)).toDF("id", "drop"))
     cat.write("ns", "fd", (11 to 20).map(i => (i, false)).toDF("id", "drop"), SaveMode.Append)
-    val (_, rels) = cat.latestEntries("ns", "fd")
+    val rels = cat.snapshot("ns", "fd").entries
     val before = rels.map(r => r -> dirFingerprint(cat, "ns", "fd", r)).toMap
     cat.delete("ns", "fd", col("drop"))
-    val (_, after) = cat.latestEntries("ns", "fd")
+    val after = cat.snapshot("ns", "fd").entries
     // second commit has no matches → entry + dir untouched
     assert(after.contains(rels(1)) && !after.contains(rels(0)))
     assert(dirFingerprint(cat, "ns", "fd", rels(1)) == before(rels(1)))
@@ -554,13 +554,13 @@ class LakeSpec extends SparkSpec {
     cat.write("ns", "fu", (1 to 10).map(i => (i, i * 10, i * 100)).toDF("id", "a", "b"))
     cat.write("ns", "fu", (11 to 20).map(i => (i, i * 10, i * 100)).toDF("id", "a", "b"),
       SaveMode.Append)
-    val (_, rels) = cat.latestEntries("ns", "fu")
+    val rels = cat.snapshot("ns", "fu").entries
     val before = rels.map(r => r -> dirFingerprint(cat, "ns", "fu", r)).toMap
     // SET a = b, b = a swaps (all RHS read the PRE-update row); only the
     // first commit holds matches, so the second stays byte-identical
     cat.update("ns", "fu",
       Seq("a" -> col("b"), "b" -> col("a")), col("id") <= 5)
-    val (_, after) = cat.latestEntries("ns", "fu")
+    val after = cat.snapshot("ns", "fu").entries
     assert(after.contains(rels(1)) && !after.contains(rels(0)))
     assert(dirFingerprint(cat, "ns", "fu", rels(1)) == before(rels(1)))
     val got = cat.read("ns", "fu").orderBy("id").collect()
@@ -587,11 +587,11 @@ class LakeSpec extends SparkSpec {
     val cat = freshCatalog()
     import spark.implicits._
     cat.write("ns", "un", Seq((1, "a"), (2, "b")).toDF("id", "v"))
-    val (_, rels) = cat.latestEntries("ns", "un")
+    val rels = cat.snapshot("ns", "un").entries
     val before = dirFingerprint(cat, "ns", "un", rels.head)
     cat.update("ns", "un", Seq("v" -> lit("z")), col("id") > 99)
     assert(cat.versions("ns", "un") == Seq(1, 2))
-    val (_, after) = cat.latestEntries("ns", "un")
+    val after = cat.snapshot("ns", "un").entries
     assert(after == rels)
     assert(dirFingerprint(cat, "ns", "un", rels.head) == before)
   }
@@ -600,11 +600,11 @@ class LakeSpec extends SparkSpec {
     val cat = freshCatalog()
     import spark.implicits._
     cat.write("ns", "nm", Seq((1, "keep"), (2, "keep")).toDF("id", "v"))
-    val (_, rels) = cat.latestEntries("ns", "nm")
+    val rels = cat.snapshot("ns", "nm").entries
     val before = dirFingerprint(cat, "ns", "nm", rels.head)
     cat.delete("ns", "nm", col("v") === "nothing-matches")
     assert(cat.versions("ns", "nm") == Seq(1, 2))
-    val (_, after) = cat.latestEntries("ns", "nm")
+    val after = cat.snapshot("ns", "nm").entries
     assert(after == rels, "no-match delete must keep every entry verbatim")
     assert(dirFingerprint(cat, "ns", "nm", rels.head) == before)
     assert(cat.rowCount("ns", "nm") == 2)
@@ -643,12 +643,12 @@ class LakeSpec extends SparkSpec {
     cat.write("ns", "cs", Seq(1001).toDF("id"), SaveMode.Append)          // small
     cat.write("ns", "cs", Seq(1002).toDF("id"), SaveMode.Append)          // small
     cat.write("ns", "cs", Seq(1003).toDF("id"), SaveMode.Append)          // small
-    val (_, rels) = cat.latestEntries("ns", "cs")
+    val rels = cat.snapshot("ns", "cs").entries
     val bigRel = rels.head
     val bigBefore = dirFingerprint(cat, "ns", "cs", bigRel)
     val v = cat.compactSmall("ns", "cs", smallRowThreshold = 100L)
     assert(v == 5)
-    val (_, after) = cat.latestEntries("ns", "cs")
+    val after = cat.snapshot("ns", "cs").entries
     assert(after.length == 2, s"3 small commits should fold into one: $after")
     assert(after.contains(bigRel) && dirFingerprint(cat, "ns", "cs", bigRel) == bigBefore,
       "the big commit must not be rewritten")
@@ -675,10 +675,10 @@ class LakeSpec extends SparkSpec {
     import spark.implicits._
     cat.write("ns", "rb", Seq(1, 2).toDF("id"))                          // v1
     cat.write("ns", "rb", Seq(9).toDF("id"), SaveMode.Overwrite)          // v2 (bad deploy)
-    val (_, v1Entries) = (1, cat.entriesOf("ns", "rb", 1))
+    val v1Entries = cat.snapshot("ns", "rb", Some(1)).entries
     val v = cat.rollback("ns", "rb", 1)
     assert(v == 3)
-    assert(cat.entriesOf("ns", "rb", 3) == v1Entries, "rollback must republish v1's entries")
+    assert(cat.snapshot("ns", "rb", Some(3)).entries == v1Entries, "rollback must republish v1's entries")
     assert(cat.read("ns", "rb").collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
     assert(cat.read("ns", "rb", Some(2)).collect().map(_.getInt(0)).toSeq == Seq(9),
       "rolled-back-over snapshot stays time-travelable")

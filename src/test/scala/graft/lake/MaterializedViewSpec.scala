@@ -68,7 +68,7 @@ class MaterializedViewSpec extends SparkSpec {
     // the base table would now fail; a delta-only refresh never notices
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sessionState.newHadoopConf())
-    val (_, rels) = cat.latestEntries("ns", "base")
+    val rels = cat.snapshot("ns", "base").entries
     rels.foreach { rel =>
       val p = new org.apache.hadoop.fs.Path(s"${cat.root}/ns/base/$rel")
       fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
@@ -123,7 +123,7 @@ class MaterializedViewSpec extends SparkSpec {
     // and the committed version's DATA DIR carries the cursor sidecar
     // matching the base (the dir-keyed scheme: cursor and data share a
     // uuid, so the manifest CAS decides which cursor is live)
-    val rel = cat.latestEntries("ns", "view")._2.find(_.startsWith("data/")).get
+    val rel = cat.snapshot("ns", "view").entries.find(_.startsWith("data/")).get
     assert(cat.getTableMeta("ns", "view", s"mvseen-d${rel.stripPrefix("data/")}")
       .map(_.trim.toInt).contains(cat.versions("ns", "base").last))
   }
@@ -186,9 +186,11 @@ class MaterializedViewSpec extends SparkSpec {
     cat.write("ns", "t", Seq(1, 2).toDF("id"))
     cat.write("ns", "t", Seq(3).toDF("id"), SaveMode.Append)
     assert(cat.readAppended("ns", "t", 1, 2).as[Int].collect().toSet == Set(3))
-    assert(cat.appendedEntries("ns", "t", 1, 2).exists(_.length == 1))
+    val appended = cat.snapshot("ns", "t", Some(1)).diff(cat.snapshot("ns", "t", Some(2)))
+    assert(appended.appendOnly && appended.added.length == 1)
     cat.write("ns", "t", Seq(9).toDF("id"), SaveMode.Overwrite)
-    assert(cat.appendedEntries("ns", "t", 2, 3).isEmpty, "overwrite is not append-only")
+    assert(!cat.snapshot("ns", "t", Some(2)).diff(cat.snapshot("ns", "t", Some(3))).appendOnly,
+      "overwrite is not append-only")
     assert(cat.readAppended("ns", "t", 2, 3).as[Int].collect().toSet == Set(9))
   }
 }

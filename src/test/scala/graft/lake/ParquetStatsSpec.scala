@@ -30,7 +30,7 @@ class ParquetStatsSpec extends SparkSpec {
   test("footer stats sidecar is byte-equal to the scan-derived sidecar") {
     val cat = freshCatalog()
     cat.write("ns", "m", mixedFrame())                    // footer path
-    val (_, rels) = cat.latestEntries("ns", "m")
+    val rels = cat.snapshot("ns", "m").entries
     val sidecar = java.nio.file.Paths.get(cat.root, "ns", "m", rels.head, "_graft_stats.tsv")
     val footerBytes = Files.readAllBytes(sidecar)
 
@@ -106,7 +106,7 @@ class ParquetStatsSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((1, "a", 10), (2, "b", 20), (3, "a", 30)).toDF("id", "grp", "v")
     cat.write("ns", "p", df, partitionBy = Seq("grp"))
-    val (_, rels) = cat.latestEntries("ns", "p")
+    val rels = cat.snapshot("ns", "p").entries
     val stats = cat.commitStats("ns", "p", rels.head)
     assert(stats.isDefined)
     val (rows, cols) = stats.get

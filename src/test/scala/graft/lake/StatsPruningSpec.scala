@@ -29,7 +29,7 @@ class StatsPruningSpec extends SparkSpec {
     val cat = freshCatalog()
     import spark.implicits._
     cat.write("ns", "s", Seq((HighBmp, 1), (Emoji, 2)).toDF("k", "v"))
-    val (_, rels) = cat.latestEntries("ns", "s")
+    val rels = cat.snapshot("ns", "s").entries
     // sidecar bounds are [U+E000, emoji] in UTF-8 order; the probe sits
     // between them in UTF-8 but ABOVE the max in UTF-16 — a UTF-16
     // compare would falsely prune this commit

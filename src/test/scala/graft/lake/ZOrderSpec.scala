@@ -33,7 +33,7 @@ class ZOrderSpec extends SparkSpec {
     val cat = freshCatalog()
     val df = grid()
     cat.writeClustered("ns", "zt", df, Seq("x", "y"), commits = 16)
-    val (_, entries) = cat.latestEntries("ns", "zt")
+    val entries = cat.snapshot("ns", "zt").entries
     assert(entries.length > 4, s"expected many z-bucket entries, got ${entries.length}")
     // full contents intact
     assert(cat.read("ns", "zt").count() == 10000)
@@ -133,7 +133,7 @@ class ZOrderSpec extends SparkSpec {
       .toDF("id", "x").repartition(2)
     cat.write("ns", "inf", df)
     assert(cat.rowCount("ns", "inf") == 4)
-    val (_, rels) = cat.latestEntries("ns", "inf")
+    val rels = cat.snapshot("ns", "inf").entries
     val stats = cat.commitStats("ns", "inf", rels.head)
     assert(stats.isDefined && stats.get._1 == 4)
     // id column keeps bounds; band reads stay correct either way
@@ -149,7 +149,7 @@ class ZOrderSpec extends SparkSpec {
     // 5 cols x 4 bits = 2^20 morton cells; x 4096 overflows Int — must not
     // produce negative/garbage bucket ids
     cat.writeClustered("ns", "wide", df, Seq("a", "b", "c", "d", "e"), commits = 4096)
-    val (_, entries) = cat.latestEntries("ns", "wide")
+    val entries = cat.snapshot("ns", "wide").entries
     val ids = entries.map(_.split("_zbucket=").last.toInt)
     assert(ids.forall(i => i >= 0 && i < 4096), s"bucket ids out of range: ${ids.take(5)}")
     assert(cat.read("ns", "wide").count() == 200)
@@ -173,9 +173,9 @@ class ZOrderSpec extends SparkSpec {
   test("file-scoped DELETE rewrites only the z-buckets holding matches") {
     val cat = freshCatalog()
     cat.writeClustered("ns", "d", grid(), Seq("x", "y"), commits = 16)
-    val (_, before) = cat.latestEntries("ns", "d")
+    val before = cat.snapshot("ns", "d").entries
     cat.delete("ns", "d", col("x") < 50 && col("y") < 50)
-    val (_, after) = cat.latestEntries("ns", "d")
+    val after = cat.snapshot("ns", "d").entries
     val kept = before.toSet & after.toSet
     assert(kept.nonEmpty, "a corner delete must leave far-corner z-buckets untouched")
     assert(cat.read("ns", "d").filter("x < 50 AND y < 50").count() == 0)

@@ -140,9 +140,9 @@ class SqlFacadeSpec extends SparkSpec {
       spark.sql("INSERT INTO graft.sqlns.m SELECT 5L AS id, 'v5' AS v").collect()
       spark.sql("INSERT INTO graft.sqlns.m SELECT 6L AS id, 'v6' AS v").collect()
       // OPTIMIZE bin-packs the three small commits into one entry
-      assert(cat.latestEntries("sqlns", "m")._2.size == 3)
+      assert(cat.snapshot("sqlns", "m").entries.size == 3)
       spark.sql("OPTIMIZE graft.sqlns.m").collect()
-      assert(cat.latestEntries("sqlns", "m")._2.size == 1)
+      assert(cat.snapshot("sqlns", "m").entries.size == 1)
       assert(spark.sql("SELECT count(*) AS n FROM graft.sqlns.m")
         .head().getLong(0) == 6L)
       // TIMESTAMP AS OF (standard grammar, evaluated by the analyzer in

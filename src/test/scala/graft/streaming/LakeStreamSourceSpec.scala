@@ -246,7 +246,7 @@ class LakeStreamSourceSpec extends SparkSpec {
     // shape dir granularity cannot split
     cat.write("s", "bt", rows(24).repartition(6))
     val files = cat.commitFilesIfFlat("s", "bt",
-      cat.latestEntries("s", "bt")._2.head).get
+      cat.snapshot("s", "bt").entries.head).get
     assert(files.size === 6, files.toString)
     // budget ~ two files per batch
     val cap = (files(0)._2 + files(1)._2 + 1).toString
@@ -315,7 +315,7 @@ class LakeStreamSourceSpec extends SparkSpec {
     val cat = LakeCatalog(spark, root.toString)
     cat.write("s", "e2b", rows(24).repartition(6))
     val files = cat.commitFilesIfFlat("s", "e2b",
-      cat.latestEntries("s", "e2b")._2.head).get
+      cat.snapshot("s", "e2b").entries.head).get
     val cap = (files.map(_._2).max * 2 + 1).toString
     val cp = root.resolve("cp").toString
     val outDir = root.resolve("out").toString
