@@ -356,7 +356,7 @@ final class LakeCatalog(
     val s = snapshot(ns, t, Some(version))
     if (s.dvs.isEmpty) Set.empty
     else {
-      val m = markedDirs(ns, t, s.dvs)
+      val m = markedDirs(dvFrame(ns, t, s.dvs))
       s.data.filter(rel => entryMarked(m, rel)).toSet
     }
   }
@@ -607,16 +607,16 @@ final class LakeCatalog(
     }
   }
 
-  /** The distinct parent DIRECTORIES of vector-marked files — one row
-    * per marked file in the KB-sized sidecars, so the collect is
+  /** The distinct parent DIRECTORIES of the files a mark frame
+    * (`_dv_file`, `_dv_pos`) marks — one row per marked file, so the collect is
     * bounded by file count, not marked-row count. Directory (not
     * commit) granularity matters: one z-ordered write is a single
     * "data/<uuid>" commit whose z-buckets are separate manifest
     * entries, and only the buckets actually holding marks should pay
     * the vectored scan or a materialize rewrite.
     */
-  private def markedDirs(ns: String, t: String, dvs: Seq[String]): Set[String] =
-    dvFrame(ns, t, dvs).select("_dv_file").distinct()
+  private def markedDirs(marks: DataFrame): Set[String] =
+    marks.select("_dv_file").distinct()
       .collect().map(_.getString(0))
       .map(f => f.substring(0, f.lastIndexOf('/'))).toSet
 
@@ -626,6 +626,16 @@ final class LakeCatalog(
     */
   private def entryMarked(marked: Set[String], e: String): Boolean =
     marked.exists(d => d == e || d.startsWith(e + "/"))
+
+  /** Column test over a mark frame: the mark's file sits under one of
+    * `entries` — flat commits are 2 path segments, z-bucket entries 3;
+    * testing both prefixes covers either shape.
+    */
+  private def marksUnder(entries: Set[String]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{col, substring_index}
+    substring_index(col("_dv_file"), "/", 2).isin(entries.toSeq: _*) ||
+      substring_index(col("_dv_file"), "/", 3).isin(entries.toSeq: _*)
+  }
 
   /** The given DATA dirs with the snapshot's deletion vectors applied.
     * Vector-free snapshots take the plain scan path (no `_metadata`
@@ -642,7 +652,7 @@ final class LakeCatalog(
     if (dvs.isEmpty) readDirs(ns, t, wanted)
     else {
       import org.apache.spark.sql.functions.col
-      val marked = markedDirs(ns, t, dvs)
+      val marked = markedDirs(dvFrame(ns, t, dvs))
       val (vectored, plain) = wanted.partition(rel => entryMarked(marked, rel))
       val parts =
         (if (vectored.isEmpty) Nil
@@ -675,13 +685,10 @@ final class LakeCatalog(
       if (dvs.isEmpty) marked0
       else marked0.join(dvJoinSide(ns, t, dvs), Seq("_dv_file", "_dv_pos"),
         "left_anti")
-    val rel = s"dv/${java.util.UUID.randomUUID().toString}"
-    val out = new Path(tPath(ns, t), rel)
-    marked.write.mode(SaveMode.Overwrite).parquet(out.toString)
-    val dvRows = writeStats(ns, t, rel)
+    val (rel, dvRows) = writeEntry(ns, t, marked, "dv")
     val v =
       if (dvRows == 0L) {
-        deleteRec(out)
+        deleteRec(new Path(tPath(ns, t), rel))
         commit(ns, t, snap.entries, Some(snap.version))
       } else commit(ns, t, snap.entries :+ rel, Some(snap.version))
     // AUTO-MATERIALIZE VALVE (opt-in): once the snapshot's accumulated
@@ -710,7 +717,7 @@ final class LakeCatalog(
   def materializeDeletes(ns: String, t: String): Int = {
     val snap = snapshot(ns, t)
     if (snap.dvs.isEmpty) return snap.version
-    val marked = markedDirs(ns, t, snap.dvs)
+    val marked = markedDirs(dvFrame(ns, t, snap.dvs))
     // entries (2-segment commits or deeper z-bucket entries) that
     // actually contain marked files — only they are rewritten
     val touched = snap.data.filter(e => entryMarked(marked, e))
@@ -746,6 +753,59 @@ final class LakeCatalog(
       .option("parquet.block.size", (8 * 1024 * 1024).toString)
   }
 
+  /** The one commit writer: `df` as a fresh `<kind>/<uuid>` dir (`kind`
+    * is `data` or `dv`), micros timestamps, through the width-adaptive
+    * [[parquetWriter]], optionally hive-partitioned. Returns its rel. The
+    * dir is referenced by no manifest until the caller commits it.
+    */
+  private def writeDir(ns: String, t: String, df: DataFrame, kind: String = "data",
+      partitionBy: Seq[String] = Nil): String = {
+    createNamespace(ns)
+    val rel = s"$kind/${java.util.UUID.randomUUID().toString}"
+    withMicrosTimestamps {
+      val writer = parquetWriter(df)
+      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
+        .parquet(new Path(tPath(ns, t), rel).toString)
+    }
+    rel
+  }
+
+  /** [[writeDir]] plus the dir's stats sidecar ([[writeStats]]), for a dir
+    * that is one manifest entry. Returns (rel, rows).
+    */
+  private def writeEntry(ns: String, t: String, df: DataFrame, kind: String = "data",
+      partitionBy: Seq[String] = Nil): (String, Long) = {
+    val rel = writeDir(ns, t, df, kind, partitionBy)
+    (rel, writeStats(ns, t, rel))
+  }
+
+  /** The next entry list after committing fresh `rels` onto `base`: an
+    * APPEND extends every entry; any other mode replaces the DATA but not
+    * the table state ([[Snapshot.replacedBy]]) — sink high-water marks
+    * (txn/ lines) survive, exactly as Delta's setTransaction actions
+    * survive an overwrite, so a maintenance overwrite racing a streaming
+    * sink cannot reopen the sink's replay window; declared columns survive
+    * too (Delta keeps the table schema across INSERT OVERWRITE), and the
+    * read-side guard only injects them while the new data lacks the name.
+    */
+  private def entriesAfter(base: Snapshot, mode: SaveMode, rels: Seq[String]): Seq[String] =
+    if (mode == SaveMode.Append) base.appended(rels) else base.replacedBy(rels)
+
+  /** Commit fresh `rels` onto the latest main snapshot by `mode`. An
+    * append EXTENDS the entry list it read, so it is always CAS'd against
+    * the version it extended — otherwise a concurrent commit landing
+    * between the read and the publish would be silently dropped from the
+    * new manifest (lost update). Callers may still pin an earlier
+    * `expectedVersion` explicitly.
+    */
+  private def commitOnto(ns: String, t: String, rels: Seq[String], mode: SaveMode,
+      expectedVersion: Option[Int]): Int = {
+    val base = current(ns, t)
+    val cas = if (mode == SaveMode.Append) expectedVersion.orElse(base.map(_.version))
+      else expectedVersion
+    commit(ns, t, entriesAfter(base.getOrElse(Snapshot.empty), mode, rels), cas)
+  }
+
   /** Write a commit. OVERWRITE replaces the file list; APPEND extends it
     * (no data rewrite). Optional hive-style partitioning. Pass
     * `expectedVersion` (the version this writer read before staging — 0 for
@@ -759,35 +819,8 @@ final class LakeCatalog(
       mode: SaveMode = SaveMode.Overwrite,
       partitionBy: Seq[String] = Nil,
       expectedVersion: Option[Int] = None): Int = {
-    createNamespace(ns)
-    val commitId = java.util.UUID.randomUUID().toString
-    val rel = s"data/$commitId"
-    val out = new Path(tPath(ns, t), rel)
-    withMicrosTimestamps {
-      val writer = parquetWriter(df)
-      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-        .parquet(out.toString)
-    }
-    writeStats(ns, t, rel)
-    (mode, current(ns, t)) match {
-      case (SaveMode.Append, Some(snap)) =>
-        // an append EXTENDS the entry list it read, so it is always CAS'd
-        // against the version it extended — otherwise a concurrent commit
-        // landing between the read and the publish would be silently
-        // dropped from the new manifest (lost update). Callers may still
-        // pin an earlier expectedVersion explicitly.
-        commit(ns, t, snap.entries :+ rel, expectedVersion.orElse(Some(snap.version)))
-      case (_, prev) =>
-        // an OVERWRITE replaces the DATA, not the table's transaction
-        // history: sink high-water marks (txn/ lines) survive, exactly as
-        // Delta's setTransaction actions survive an overwrite — otherwise a
-        // maintenance overwrite racing a streaming sink would reopen the
-        // sink's replay window. Declared columns survive too (Delta keeps
-        // the table schema across INSERT OVERWRITE); the read-side guard
-        // only injects them when the new data does not already carry the
-        // name.
-        commit(ns, t, prev.fold(Seq.empty[String])(_.tableState) :+ rel, expectedVersion)
-    }
+    val (rel, _) = writeEntry(ns, t, df, partitionBy = partitionBy)
+    commitOnto(ns, t, Seq(rel), mode, expectedVersion)
   }
 
   // ----- idempotent transactional appends (exactly-once streaming sinks) ---
@@ -816,26 +849,48 @@ final class LakeCatalog(
     * re-checks before retrying.
     */
   def writeTxn(ns: String, t: String, appId: String, batchId: Long,
-      df: DataFrame, partitionBy: Seq[String] = Nil): Option[Int] = {
-    def latest: Snapshot = current(ns, t).getOrElse(Snapshot.empty)
-    def replayed(s: Snapshot): Boolean = s.txns.get(appId).exists(_ >= batchId)
-    var snap = latest
-    if (replayed(snap)) return None
-    val staged = stageWrite(ns, t, df, SaveMode.Append, partitionBy)
-    var attempts = 0
-    while (true) {
-      try {
-        return Some(commit(ns, t, snap.withTxn(appId, batchId, Seq(staged.rel)),
-          Some(snap.version)))
-      } catch {
+      df: DataFrame, partitionBy: Seq[String] = Nil): Option[Int] =
+    commitTxn(ns, t, None, appId, batchId, Some(df), partitionBy)
+
+  /** The latest snapshot of a lineage: main (`branch` None, empty while
+    * the table does not exist) or the named branch's tip.
+    */
+  private def tip(ns: String, t: String, branch: Option[String]): Snapshot =
+    branch.fold(current(ns, t).getOrElse(Snapshot.empty))(branchSnapshot(ns, t, _))
+
+  /** The txn verbs' one conflict-retry loop: write `df` (if any) as a
+    * fresh entry, then publish the lineage's tip plus that entry and the
+    * (`appId`, `batchId`) mark ([[commit]] on main, [[commitBranch]] on a
+    * branch), each CAS'd against the snapshot it extends, re-reading the
+    * [[tip]] after each lost CAS. None once the tip holds that mark or a
+    * later one (a replay, or a concurrent writer of the same batch), or
+    * when a bare mark would land on a lineage without data (a version
+    * carrying only a watermark is unreadable); the last
+    * [[CommitConflictException]] after 8 lost rounds. The written dir is
+    * deleted whenever nothing publishes it.
+    */
+  private def commitTxn(ns: String, t: String, branch: Option[String], appId: String,
+      batchId: Long, df: Option[DataFrame], partitionBy: Seq[String] = Nil): Option[Int] = {
+    def due(s: Snapshot) =
+      !s.txns.get(appId).exists(_ >= batchId) && (df.nonEmpty || s.data.nonEmpty)
+    var cur = tip(ns, t, branch)
+    if (!due(cur)) return None
+    val staged = df.map(writeEntry(ns, t, _, partitionBy = partitionBy)._1)
+    def abort(): Unit = staged.foreach(rel => deleteRec(new Path(tPath(ns, t), rel)))
+    var lost = 0
+    while (due(cur)) {
+      val next = cur.withTxn(appId, batchId, staged.toSeq)
+      try return Some(branch.fold(commit(ns, t, next, Some(cur.version)))(
+        commitBranch(ns, t, _, cur.version, next)))
+      catch {
         case e: CommitConflictException =>
-          attempts += 1
-          snap = latest
-          if (replayed(snap)) { abortStaged(staged); return None }
-          if (attempts >= 8) { abortStaged(staged); throw e }
+          cur = tip(ns, t, branch)
+          lost += 1
+          if (lost >= 8 && due(cur)) { abort(); throw e }
       }
     }
-    sys.error("unreachable")
+    abort()
+    None
   }
 
   /** Record a txn watermark as a METADATA-ONLY commit (no data entry) —
@@ -847,21 +902,8 @@ final class LakeCatalog(
     * hold no data yet (a version carrying only a watermark would be
     * unreadable), and on batch ids at or below the recorded mark.
     */
-  def recordTxn(ns: String, t: String, appId: String, batchId: Long): Option[Int] = {
-    var attempts = 0
-    while (true) {
-      val snap = current(ns, t).getOrElse(Snapshot.empty)
-      if (snap.data.isEmpty) return None
-      if (snap.txns.get(appId).exists(_ >= batchId)) return None
-      try return Some(commit(ns, t, snap.withTxn(appId, batchId), Some(snap.version)))
-      catch {
-        case e: CommitConflictException =>
-          attempts += 1
-          if (attempts >= 8) throw e
-      }
-    }
-    sys.error("unreachable")
-  }
+  def recordTxn(ns: String, t: String, appId: String, batchId: Long): Option[Int] =
+    commitTxn(ns, t, None, appId, batchId, None)
 
   /** [[writeTxn]] onto a BRANCH lineage (the audited-streaming sink): the
     * watermark lives in the branch manifest and flows to main with the
@@ -869,25 +911,8 @@ final class LakeCatalog(
     * before or after the session's publish.
     */
   def writeBranchTxn(ns: String, t: String, name: String, appId: String,
-      batchId: Long, df: DataFrame): Option[Int] = {
-    def replayed(s: Snapshot): Boolean = s.txns.get(appId).exists(_ >= batchId)
-    if (replayed(branchSnapshot(ns, t, name))) return None
-    val staged = stageWrite(ns, t, df, SaveMode.Append)
-    var attempts = 0
-    while (true) {
-      val snap = branchSnapshot(ns, t, name)
-      if (replayed(snap)) { abortStaged(staged); return None }
-      val published = commitBranch(ns, t, name, snap.withTxn(appId, batchId, Seq(staged.rel)))
-      if (published.nonEmpty) return published
-      attempts += 1
-      if (attempts >= 8) {
-        abortStaged(staged)
-        throw new CommitConflictException(
-          s"concurrent writer kept publishing branch $name of $ns.$t")
-      }
-    }
-    sys.error("unreachable")
-  }
+      batchId: Long, df: DataFrame): Option[Int] =
+    commitTxn(ns, t, Some(name), appId, batchId, Some(df))
 
   // ----- write-audit-publish (Iceberg WAP pattern) ------------------------
   // Stage the data of a commit WITHOUT making it visible, audit the
@@ -912,15 +937,7 @@ final class LakeCatalog(
   def stageWrite(ns: String, t: String, df: DataFrame,
       mode: SaveMode = SaveMode.Append,
       partitionBy: Seq[String] = Nil): StagedCommit = {
-    createNamespace(ns)
-    val rel = s"data/${java.util.UUID.randomUUID().toString}"
-    val out = new Path(tPath(ns, t), rel)
-    withMicrosTimestamps {
-      val writer = parquetWriter(df)
-      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-        .parquet(out.toString)
-    }
-    writeStats(ns, t, rel)
+    val (rel, _) = writeEntry(ns, t, df, partitionBy = partitionBy)
     StagedCommit(ns, t, rel, mode, versions(ns, t).lastOption.getOrElse(0))
   }
 
@@ -943,12 +960,10 @@ final class LakeCatalog(
     * [[CommitConflictException]] and the staged dir stays intact for a
     * re-audit + retry on the new base.
     */
-  def publishStaged(s: StagedCommit): Int = s.mode match {
-    case SaveMode.Append if s.baseVersion > 0 =>
-      commit(s.ns, s.table,
-        snapshot(s.ns, s.table, Some(s.baseVersion)).entries :+ s.rel,
-        Some(s.baseVersion))
-    case _ => commit(s.ns, s.table, Seq(s.rel), Some(s.baseVersion))
+  def publishStaged(s: StagedCommit): Int = {
+    val base =
+      if (s.baseVersion > 0) snapshot(s.ns, s.table, Some(s.baseVersion)) else Snapshot.empty
+    commit(s.ns, s.table, entriesAfter(base, s.mode, Seq(s.rel)), Some(s.baseVersion))
   }
 
   /** Drop a staged commit that failed its audit: one dir delete, no
@@ -981,7 +996,6 @@ final class LakeCatalog(
     // every bucket).
     require(clusterCols.length <= 6, "z-order supports at most 6 cluster columns")
     require(commits >= 1 && commits <= 4096, "z-bucket count out of range")
-    createNamespace(ns)
     import org.apache.spark.sql.functions.col
     val cuts = ZOrder.boundaries(df, clusterCols)
     val totalCells = 1L << (ZOrder.BitsPerCol * clusterCols.length)
@@ -990,22 +1004,13 @@ final class LakeCatalog(
     // exceed Int — the bucket id itself always fits.
     val zb = (ZOrder.mortonKey(clusterCols.map(col), cuts).cast("long")
       * commits / totalCells).cast("int")
-    val rel = s"data/${java.util.UUID.randomUUID().toString}"
-    val out = new Path(tPath(ns, t), rel)
-    withMicrosTimestamps {
-      df.withColumn("_zbucket", zb)
-        .repartition(commits, col("_zbucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("_zbucket").parquet(out.toString)
-    }
-    val fresh = fs.listStatus(out).filter(_.isDirectory)
+    val rel = writeDir(ns, t,
+      df.withColumn("_zbucket", zb).repartition(commits, col("_zbucket")),
+      partitionBy = Seq("_zbucket"))
+    val fresh = fs.listStatus(new Path(tPath(ns, t), rel)).filter(_.isDirectory)
       .map(st => s"$rel/${st.getPath.getName}").sorted.toSeq
     fresh.foreach(e => writeStats(ns, t, e))
-    (mode, current(ns, t)) match {
-      case (SaveMode.Append, Some(snap)) =>
-        commit(ns, t, snap.entries ++ fresh, expectedVersion.orElse(Some(snap.version)))
-      case _ =>
-        commit(ns, t, fresh, expectedVersion)
-    }
+    commitOnto(ns, t, fresh, mode, expectedVersion)
   }
 
   /** File-scoped copy-on-write commit (the Iceberg `MERGE INTO` rewrite
@@ -1027,34 +1032,20 @@ final class LakeCatalog(
       replacement: DataFrame): Int = {
     val unknown = replaced -- base.entries.toSet
     require(unknown.isEmpty, s"not in v${base.version} of $ns.$t: ${unknown.mkString(",")}")
-    val rel = s"data/${java.util.UUID.randomUUID().toString}"
-    val out = new Path(tPath(ns, t), rel)
-    withMicrosTimestamps {
-      replacement.write.mode(SaveMode.Overwrite).parquet(out.toString)
-    }
-    val rows = writeStats(ns, t, rel)
+    val (rel, rows) = writeEntry(ns, t, replacement)
     // deletion vectors referencing a replaced commit would dangle (their
     // marked rows are gone from the data) — prune those refs, dropping or
     // rewriting each affected vector, so vector row counts stay exact
     // (rowCount subtracts them) and materializeDeletes converges
     val keptData = base.data.filterNot(replaced)
     val keptDvs = base.dvs.flatMap { dvRel =>
-      import org.apache.spark.sql.functions.{col, substring_index}
-      // a vector row belongs to entry e when its file sits under e —
-      // flat commits are 2 path segments, z-bucket entries 3; testing
-      // both prefixes covers either shape
-      val inReplaced =
-        substring_index(col("_dv_file"), "/", 2).isin(replaced.toSeq: _*) ||
-          substring_index(col("_dv_file"), "/", 3).isin(replaced.toSeq: _*)
-      val frame = dvFrame(ns, t, Seq(dvRel)).withColumn("__hit", inReplaced)
+      import org.apache.spark.sql.functions.col
+      val frame = dvFrame(ns, t, Seq(dvRel)).withColumn("__hit", marksUnder(replaced))
       val refsReplaced = frame.filter(col("__hit")).limit(1).count() > 0
       if (!refsReplaced) Some(dvRel)
       else {
-        val surviving = frame.filter(!col("__hit")).drop("__hit")
-        val fresh = s"dv/${java.util.UUID.randomUUID().toString}"
-        val freshOut = new Path(tPath(ns, t), fresh)
-        surviving.write.mode(SaveMode.Overwrite).parquet(freshOut.toString)
-        if (writeStats(ns, t, fresh) == 0L) { deleteRec(freshOut); None }
+        val (fresh, n) = writeEntry(ns, t, frame.filter(!col("__hit")).drop("__hit"), "dv")
+        if (n == 0L) { deleteRec(new Path(tPath(ns, t), fresh)); None }
         else Some(fresh)
       }
     }
@@ -1062,8 +1053,9 @@ final class LakeCatalog(
     // rewrite (compaction, CoW delete) must never reopen a streaming
     // sink's replay window
     val next =
-      (if (rows == 0L && keptData.nonEmpty) { deleteRec(out); keptData ++ keptDvs }
-       else (keptData :+ rel) ++ keptDvs) ++ base.tableState
+      (if (rows == 0L && keptData.nonEmpty) {
+        deleteRec(new Path(tPath(ns, t), rel)); keptData ++ keptDvs
+      } else (keptData :+ rel) ++ keptDvs) ++ base.tableState
     commit(ns, t, next, Some(base.version))
   }
 
@@ -1093,8 +1085,12 @@ final class LakeCatalog(
     val shared = afterSnap.data.toSet -- diff.added
 
     def full(): DataFrame = {
-      val before = readSnapshot(ns, t, beforeSnap)
-      val after = readSnapshot(ns, t, afterSnap)
+      // a window across ADD COLUMN reads a column on one side only: align
+      // both sides by name, null-filling, in one column order (the after
+      // side's, then before-only names) before the multiset diff
+      val (b, a) = (readSnapshot(ns, t, beforeSnap), readSnapshot(ns, t, afterSnap))
+      val after = SchemaTools.unifySchemas(Seq(a, b.limit(0)))
+      val before = SchemaTools.unifySchemas(Seq(a.limit(0), b))
       after.exceptAll(before).withColumn("_change", lit("insert"))
         .unionByName(before.exceptAll(after).withColumn("_change", lit("delete")))
     }
@@ -1120,14 +1116,8 @@ final class LakeCatalog(
     // already accounted by the side reads.
     def marksIn(dvs: Seq[String]): Option[DataFrame] =
       if (dvs.isEmpty) None else Some(dvFrame(ns, t, dvs))
-    def sharedOnly(df: DataFrame): DataFrame = {
-      // a mark belongs to a shared dir when its file sits under one
-      import org.apache.spark.sql.functions.substring_index
-      if (shared.isEmpty) df.limit(0)
-      else df.filter(
-        substring_index(col("_dv_file"), "/", 2).isin(shared.toSeq: _*) ||
-          substring_index(col("_dv_file"), "/", 3).isin(shared.toSeq: _*))
-    }
+    def sharedOnly(df: DataFrame): DataFrame =
+      if (shared.isEmpty) df.limit(0) else df.filter(marksUnder(shared))
     val dvDelta: Option[(DataFrame, DataFrame)] =
       if (!diff.dvsChanged) None
       else {
@@ -1146,11 +1136,8 @@ final class LakeCatalog(
         Some((newlyMarked, unmarked))
       }
     def rowsAtMarks(marks: DataFrame): DataFrame = {
-      // rows of the marked files only: collect the affected dirs (bounded
-      // by file count, same economics as markedDirs) and key-join
-      val dirs = marks.select("_dv_file").distinct()
-        .collect().map(_.getString(0))
-        .map(f => f.substring(0, f.lastIndexOf('/'))).toSet
+      // rows of the marked files only: collect the affected dirs and key-join
+      val dirs = markedDirs(marks)
       val touched = shared.toSeq.filter(e => entryMarked(dirs, e))
       if (touched.isEmpty) return readSnapshot(ns, t, afterSnap).limit(0)
       readDirsWithKey(ns, t, touched)
@@ -1485,23 +1472,28 @@ final class LakeCatalog(
       .filter(_.matches(s"b$name-v\\d+\\.txt"))
       .map(_.stripPrefix(s"b$name-v").stripSuffix(".txt").toInt).sorted
 
-  /** The branch tip: its latest commit, or the base snapshot before the
-    * first one.
+  /** The branch tip, versioned by branch-local commit number: its latest
+    * commit, or the base snapshot's entries as commit 0 before the first.
     */
   private def branchSnapshot(ns: String, t: String, name: String): Snapshot =
     branchVersions(ns, t, name).lastOption match {
       case Some(v) => load(branchManifest(ns, t, name, v), v)
-      case None => snapshot(ns, t, Some(branchBase(ns, t, name)))
+      case None => Snapshot(0, snapshot(ns, t, Some(branchBase(ns, t, name))).entries)
     }
 
-  /** Publish `entries` as the branch's next commit; None when a concurrent
-    * branch writer published that commit first.
+  /** Publish `entries`, built from branch commit `after`, as commit
+    * `after + 1`; raises [[CommitConflictException]] when a concurrent
+    * branch writer published that commit first (branch commits are
+    * numbered densely, so the exclusive publish IS the check that the tip
+    * has not moved).
     */
-  private def commitBranch(ns: String, t: String, name: String,
-      entries: Seq[String]): Option[Int] = {
-    val v = branchVersions(ns, t, name).lastOption.getOrElse(0) + 1
-    if (publish(branchManifest(ns, t, name, v), s"b$name-v$v", Snapshot(v, entries))) Some(v)
-    else None
+  private def commitBranch(ns: String, t: String, name: String, after: Int,
+      entries: Seq[String]): Int = {
+    val v = after + 1
+    if (!publish(branchManifest(ns, t, name, v), s"b$name-v$v", Snapshot(v, entries)))
+      throw new CommitConflictException(
+        s"concurrent writer published commit $v of branch $name of $ns.$t first")
+    v
   }
 
   /** Read the branch tip (branch commits + the base snapshot under them). */
@@ -1518,15 +1510,13 @@ final class LakeCatalog(
   def writeBranch(ns: String, t: String, name: String, df: DataFrame,
       mode: SaveMode = SaveMode.Append,
       partitionBy: Seq[String] = Nil): Int = {
-    val staged = stageWrite(ns, t, df, mode, partitionBy)
-    val entries = mode match {
-      case SaveMode.Overwrite => Seq(staged.rel)
-      case _ => branchSnapshot(ns, t, name).entries :+ staged.rel
-    }
-    commitBranch(ns, t, name, entries).getOrElse {
-      abortStaged(staged)
-      throw new CommitConflictException(
-        s"concurrent writer published a commit of branch $name of $ns.$t first")
+    val (rel, _) = writeEntry(ns, t, df, partitionBy = partitionBy)
+    val base = branchSnapshot(ns, t, name)
+    try commitBranch(ns, t, name, base.version, entriesAfter(base, mode, Seq(rel)))
+    catch {
+      case e: CommitConflictException =>
+        deleteRec(new Path(tPath(ns, t), rel))
+        throw e
     }
   }
 

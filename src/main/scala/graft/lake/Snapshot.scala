@@ -56,6 +56,14 @@ final case class Snapshot(version: Int, entries: Seq[String]) {
     */
   def tableState: Seq[String] = txnLines ++ colLines
 
+  /** The entry list of an append of `rels`: every entry kept. */
+  def appended(rels: Seq[String]): Seq[String] = entries ++ rels
+
+  /** The entry list of an overwrite by `rels`: the data and deletion
+    * vectors go, the table state stays.
+    */
+  def replacedBy(rels: Seq[String]): Seq[String] = tableState ++ rels
+
   /** The entry list with `added` dirs appended and `appId`'s mark moved to
     * `batchId` — one manifest carries the data and the mark, so they can
     * never tear.

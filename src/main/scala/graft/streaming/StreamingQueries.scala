@@ -112,14 +112,12 @@ object StreamingQueries {
     // the conf off). The conf is read at STREAM START, so setting it around
     // the query and restoring after is the submit-time conf a production
     // drain job would carry; continuous deployments keep the default.
-    // GRAFT_NODATA_BATCHES=true restores the default for a run — the A/B
-    // lever used for the 100x receipt (stream_neardup_twin at the sf10
-    // soak, same window: 108.5 s with no-data batches off vs 126.5 s on —
-    // the drain is faster without them at scale too, the relocated state
-    // eviction notwithstanding).
+    // The drain is faster without them at scale too (stream_neardup_twin
+    // at the sf10 soak, same window: 108.5 s with no-data batches off vs
+    // 126.5 s on), the relocated state eviction notwithstanding.
     val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val prevNoData = s.conf.getOption(noDataKey)
-    s.conf.set(noDataKey, sys.env.getOrElse("GRAFT_NODATA_BATCHES", "false"))
+    s.conf.set(noDataKey, "false")
     val query =
       try start(streams)
       finally prevNoData.fold(s.conf.unset(noDataKey))(s.conf.set(noDataKey, _))
@@ -194,13 +192,20 @@ object StreamingQueries {
   /** Stateful-stage partition count for the replay twins. 8 is the
     * r9-measured optimum at bench SFs, where per-micro-batch state-store
     * commits dominate (ScaleProbe `streamparts`: 8 beats 32 by 2.3× on the
-    * stream-stream join). On compute-bound replays (a 100× corpus pushing
-    * tens of millions of candidate pairs through the stateful stage) the
-    * trade flips — the knob stays a DEPLOYMENT conf, overridable per run
-    * via SPARK_GRAFT_STREAM_PARTS, never operator state.
+    * stream-stream join).
     */
-  private def statefulParts: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8")
+  private val StatefulParts = "8"
+
+  /** Run `f` (a replay that starts its stream) with the session's shuffle
+    * partitions at [[StatefulParts]], restoring the previous value after:
+    * the conf is pinned at stream start, so only the replay's stateful
+    * stage sees it.
+    */
+  private def withStatefulParts[T](s: SparkSession)(f: => T): T = {
+    val prev = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", StatefulParts)
+    try f finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  }
 
   /** single-row aggregate: midpoint of a long column's range — the
     * replay's batch-membership threshold (bounded, never data-sized) */
@@ -317,17 +322,15 @@ object StreamingQueries {
       // signature hashing parallelizes on the SOURCE partitions; only the
       // stateful bucket stage follows shuffle.partitions, where per-batch
       // store commits dominate — fewer partitions there (see streamJoinTwin)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", statefulParts)
-      val out =
-        try fileReplay(
+      val out = withStatefulParts(s) {
+        fileReplay(
           s,
           Seq(schema -> Seq(
             stamped(corpus.filter(col("doc_id") <= mid), base),
             stamped(corpus.filter(col("doc_id") > mid), base + 60000L))),
           srcs => EventStreams.nearDupCandidates(srcs.head.as[EventStreams.DocIn],
             threshold = 0.5).toDF())
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       // a pair colliding in several bands emits once per band: distinct
       out.select(col("a"), col("b"), col("est_jaccard"))
         .distinct()
@@ -362,15 +365,13 @@ object StreamingQueries {
       // the windowed agg's state is tiny (hours × types) but each shuffle
       // partition still commits its own store per micro-batch — fewer
       // partitions, same correctness (see streamJoinTwin)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", statefulParts)
-      val out =
-        try fileReplay(
+      val out = withStatefulParts(s) {
+        fileReplay(
           s,
           Seq(schema -> Seq(half(col("ts_us") <= mid), half(col("ts_us") > mid))),
           srcs => EventStreams.hourlyAggregates(srcs.head),
           complete = true)
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       out.select(col("window.start").cast("long").as("bucket_s"),
           col("event_type"), col("n_events"), col("total_value"))
         .orderBy("bucket_s", "event_type")
@@ -422,15 +423,13 @@ object StreamingQueries {
       // wall time, so the stateful stage runs on fewer partitions — same
       // trade as streamJoinTwin (correctness is partition-count-
       // independent; the conf is pinned at stream start)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", statefulParts)
-      val out =
-        try fileReplay(
+      val out = withStatefulParts(s) {
+        fileReplay(
           s,
           Seq(schema -> Seq(half(col("ts_us") <= mid), half(col("ts_us") > mid),
             sentinel(1), sentinel(2))),
           srcs => EventStreams.sessionize(srcs.head.as[EventStreams.Event]).toDF())
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       out.filter(col("user_id") >= 0)
         .select("user_id", "session_id", "n_events", "start_us", "end_us")
         .orderBy("user_id", "session_id")
@@ -482,10 +481,8 @@ object StreamingQueries {
       // partitions (correctness is partition-count-independent; the
       // session conf is restored after the query starts, which pins the
       // stream's own partitioning at start time)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", statefulParts)
-      val out =
-        try fileReplay(
+      val out = withStatefulParts(s) {
+        fileReplay(
           s,
           Seq(
             schema -> Seq(slice("click", col("ts_us") <= mid),
@@ -493,7 +490,7 @@ object StreamingQueries {
             schema -> Seq(slice("view", col("ts_us") <= mid),
               slice("view", col("ts_us") > mid))),
           srcs => EventStreams.correlate(srcs(0), srcs(1), withinMinutes = 60))
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       out.select(col("user_id"), col("click_id"), col("view_id"),
           unix_micros(col("click_ts")).as("click_us"),
           unix_micros(col("view_ts")).as("view_us"))
@@ -596,16 +593,14 @@ object StreamingQueries {
       // same stateful-stage partition trade as the other twins: centroid
       // assignment runs source-side; only the per-cluster state stage
       // follows shuffle.partitions
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", statefulParts)
-      val out =
-        try fileReplay(
+      val out = withStatefulParts(s) {
+        fileReplay(
           s,
           Seq(schema -> Seq(
             stamped(assigned.filter(col("vec_id") <= mid), baseTs),
             stamped(assigned.filter(col("vec_id") > mid), baseTs + 60000L))),
           srcs => EventStreams.semanticDedupStream(srcs.head.as[EventStreams.VecIn]).toDF())
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       out.select("vec_id", "dup_of", "cluster").orderBy("vec_id")
     },
     // the batch dedup_semantic oracle, verbatim — stream == batch

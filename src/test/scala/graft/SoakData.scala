@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   *
   * The round-7 soak used an equivalent script that lived outside the repo
   * and was lost with /tmp; this main replaces it so the 10×-step scale
-  * check is reproducible every round:
+  * check is reproducible every round. It lives in the test tree (not
+  * shipped in the library jar), so it runs with `Test/runMain`:
   *
-  *   sbt "runMain graft.SoakData /root/testdata/sf0.1 /tmp/graft_sf1 10"
+  *   sbt "Test/runMain graft.SoakData /root/testdata/sf0.1 /tmp/graft_sf1 10"
   *   SPARK_GRAFT_SF_DIR=/tmp/graft_sf1 sbt "runMain graft.Bench"
   *   sbt "runMain graft.Verify /tmp/graft_sf1 /tmp/vout_sf1"
   *   python3 tools/check_oracle.py /tmp/graft_sf1 /tmp/vout_sf1

@@ -3,6 +3,7 @@ package graft.lake
 import java.nio.file.Files
 
 import graft.SparkSpec
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -123,5 +124,59 @@ class BranchSpec extends SparkSpec {
     cat.createBranch("br", "t", "dev")
     intercept[IllegalArgumentException] { cat.createBranch("br", "t", "dev") }
     intercept[RuntimeException] { cat.readBranch("br", "t", "nope").count() }
+  }
+
+  test("overwrite branch commit keeps the branch's txn marks through fast-forward") {
+    import spark.implicits._
+    val cat = freshCatalog()
+    def rows(ids: Range) = ids.map(i => (i.toLong, i * 1.0)).toDF("id", "x")
+    cat.write("br", "t", rows(1 to 10))
+    cat.createBranch("br", "t", "dev")
+    assert(cat.writeBranchTxn("br", "t", "dev", "app", 3L, rows(11 to 20)).nonEmpty)
+    cat.writeBranch("br", "t", "dev", rows(100 to 102), SaveMode.Overwrite)
+    cat.fastForwardBranch("br", "t", "dev")
+    assert(cat.txnVersion("br", "t", "app").contains(3L))
+    assert(rows(100 to 102).collect().toSet == cat.read("br", "t").collect().toSet)
+  }
+
+  /** Runs `afterList` once, right after the next manifest listing returns:
+    * a concurrent writer landing just after this one read its tip.
+    */
+  private final class HookedBackend(inner: CommitBackend) extends CommitBackend {
+    var afterList: Option[() => Unit] = None
+    def mkdirs(dir: Path): Unit = inner.mkdirs(dir)
+    def exists(p: Path): Boolean = inner.exists(p)
+    def list(dir: Path): Seq[String] = {
+      val names = inner.list(dir)
+      val hook = afterList
+      afterList = None
+      hook.foreach(_())
+      names
+    }
+    def readBytes(p: Path): Array[Byte] = inner.readBytes(p)
+    def writeBytes(p: Path, bytes: Array[Byte]): Unit = inner.writeBytes(p, bytes)
+    def createExclusive(p: Path): Boolean = inner.createExclusive(p)
+    def mtime(p: Path): Option[Long] = inner.mtime(p)
+    def delete(p: Path): Unit = inner.delete(p)
+    def renameIfAbsent(src: Path, dst: Path): Boolean = inner.renameIfAbsent(src, dst)
+  }
+
+  test("a branch commit landing between a txn writer's tip read and its publish survives") {
+    import spark.implicits._
+    val backend = new HookedBackend(
+      new HadoopCommitBackend(FileSystem.getLocal(spark.sessionState.newHadoopConf())))
+    val cat = LakeCatalog(spark, Files.createTempDirectory("graft_branch").toString, Some(backend))
+    def rows(ids: Range) = ids.map(i => (i.toLong, i * 1.0)).toDF("id", "x")
+    cat.write("br", "t", rows(1 to 10))
+    cat.createBranch("br", "t", "dev")
+    cat.writeBranch("br", "t", "dev", rows(11 to 20))
+    // the txn writer reads branch commit 1; commit 2 lands before it publishes
+    backend.afterList = Some(() => cat.writeBranch("br", "t", "dev", rows(21 to 30)))
+    assert(cat.writeBranchTxn("br", "t", "dev", "app", 1L, rows(31 to 40)).contains(3))
+    assert(backend.afterList.isEmpty)
+    assert(rows(1 to 40).collect().toSet == cat.readBranch("br", "t", "dev").collect().toSet)
+    cat.fastForwardBranch("br", "t", "dev")
+    assert(cat.read("br", "t").count() == 40)
+    assert(cat.txnVersion("br", "t", "app").contains(1L))
   }
 }

@@ -114,4 +114,25 @@ class ChangelogScopedSpec extends SparkSpec {
       "cl", "t")
     assertScopedEqualsFull(cat, "cl", "t", 1, 2)
   }
+
+  test("window across ADD COLUMN: changelog and readIncremental align both sides by name") {
+    import spark.implicits._
+    val cat = freshCatalog()
+    def rows(ids: Range) = ids.map(i => (i.toLong, i * 1.0)).toDF("id", "x")
+    cat.write("cl", "t", rows(1 to 10))
+    cat.write("cl", "t", rows(6 to 15)) // CTAS over the old rows
+    cat.write("cl", "t", rows(16 to 20), SaveMode.Append)
+    cat.addColumn("cl", "t", "note", org.apache.spark.sql.types.StringType)
+    cat.write("cl", "t", (21 to 25).map(i => (i.toLong, i * 1.0, s"n$i")).toDF("id", "x", "note"),
+      SaveMode.Append)
+    val v = cat.versions("cl", "t").last
+    def row(i: Int, note: String): Seq[Any] = Seq(i.toLong, i * 1.0, note)
+    val inserts = (11 to 20).map(row(_, null)) ++ (21 to 25).map(i => row(i, s"n$i"))
+    val deletes = (1 to 5).map(row(_, null))
+    def counted(rs: Seq[Seq[Any]]) = rs.groupBy(identity).view.mapValues(_.length.toLong).toMap
+    assert(multiset(cat.changelog("cl", "t", 1, v).select("id", "x", "note", "_change")) ==
+      counted(inserts.map(_ :+ "insert") ++ deletes.map(_ :+ "delete")))
+    assert(multiset(cat.readIncremental("cl", "t", 1, v).select("id", "x", "note")) ==
+      counted(inserts))
+  }
 }

@@ -698,4 +698,36 @@ class LakeSpec extends SparkSpec {
     // deterministic winner: max over non-key columns → "z"
     assert(back.filter("id = 2 AND v = 'z'").count() == 1)
   }
+
+  test("a MERGE rewrite of a wide table writes through the wide profile (no dictionary pages)") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val cat = freshCatalog()
+    val width = cat.WideWriterCols
+    def wide(ids: Range, tag: Int) = spark.range(ids.start, ids.end).select(
+      col("id") +: (1 until width).map(c => (col("id") % 3 + c * tag).as(s"c$c")): _*)
+    cat.write("ns", "w", wide(0 until 40, 1))
+    val before = cat.snapshot("ns", "w")
+    val r = new TableMerger(cat).mergeTable(wide(30 until 50, 2), "ns", "w", Some("id"))
+    assert(r.strategy.startsWith("MERGE"))
+    assert(cat.read("ns", "w").count() == 50)
+    val fresh = before.diff(cat.snapshot("ns", "w")).added
+    assert(fresh.nonEmpty)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = FileSystem.getLocal(conf)
+    val chunks = fresh.flatMap { rel =>
+      fs.listStatus(new Path(s"${cat.root}/ns/w/$rel")).toSeq
+        .filter(_.getPath.getName.endsWith(".parquet"))
+        .flatMap { st =>
+          val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+          try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).toSeq
+          finally reader.close()
+        }
+    }
+    assert(chunks.size >= width)
+    val dict = chunks.filter(c => c.hasDictionaryPage || c.getEncodings.asScala.exists(_.usesDictionary))
+    assert(dict.isEmpty, s"${dict.size} of ${chunks.size} column chunks are dictionary-encoded")
+  }
 }

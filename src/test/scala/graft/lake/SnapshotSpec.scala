@@ -112,15 +112,21 @@ class SnapshotSpec extends SparkSpec {
     }
     // (listings, manifest reads): the latest snapshot costs one listing and
     // one read, a given version one read; commit's own listing is its
-    // conflict check, and a staged write lists once for its base
+    // conflict check
     assert(io(cat.write("ns", "t", df, SaveMode.Append)) == (2, 1), "write append")
     assert(io(cat.write("ns", "t", df, SaveMode.Overwrite)) == (2, 1), "write overwrite")
-    assert(io(cat.writeTxn("ns", "t", "app", 1L, df)) == (3, 1), "writeTxn")
+    assert(io(cat.writeTxn("ns", "t", "app", 1L, df)) == (2, 1), "writeTxn")
     assert(io(cat.recordTxn("ns", "t", "app", 2L)) == (2, 1), "recordTxn")
     assert(io(cat.read("ns", "t")) == (1, 1), "read latest")
     assert(io(cat.read("ns", "t", Some(2))) == (0, 1), "read VERSION AS OF")
     assert(io(cat.rowCount("ns", "t")) == (1, 1), "rowCount")
     val missing = intercept[IllegalArgumentException](cat.read("ns", "t", Some(99)))
     assert(missing.getMessage.contains("no snapshot v99 of ns.t (have: 1,2,3,4,5)"))
+    // a staged publish reads the version it staged on: an overwrite keeps
+    // that version's txn and col lines
+    val staged = cat.stageWrite("ns", "t", df)
+    assert(io(cat.publishStaged(staged)) == (1, 1), "publishStaged append")
+    val replacing = cat.stageWrite("ns", "t", df, SaveMode.Overwrite)
+    assert(io(cat.publishStaged(replacing)) == (1, 1), "publishStaged overwrite")
   }
 }

@@ -65,4 +65,19 @@ class WapSpec extends SparkSpec {
     cat.publishStaged(s1)
     assert(cat.read("ns", "fresh").collect().map(_.getInt(0)).toSeq == Seq(7))
   }
+
+  test("overwrite publish keeps the table's txn marks and declared columns") {
+    val cat = freshCatalog()
+    import spark.implicits._
+    cat.write("ns", "t", Seq((1, "a")).toDF("id", "v"))
+    cat.recordTxn("ns", "t", "app", 4L)
+    cat.addColumn("ns", "t", "score", org.apache.spark.sql.types.DoubleType)
+    val s1 = cat.stageWrite("ns", "t", Seq((2, "b")).toDF("id", "v"), SaveMode.Overwrite)
+    cat.publishStaged(s1)
+    assert(cat.txnVersion("ns", "t", "app").contains(4L))
+    assert(cat.recordTxn("ns", "t", "app", 4L).isEmpty, "a replayed batch must stay a no-op")
+    val back = cat.read("ns", "t")
+    assert(back.columns.toSeq == Seq("id", "v", "score"))
+    assert(back.collect().map(_.toSeq).toSeq == Seq(Seq(2, "b", null)))
+  }
 }

@@ -182,4 +182,16 @@ class ZOrderSpec extends SparkSpec {
     assert(cat.read("ns", "d").count() ==
       grid().filter("NOT (x < 50 AND y < 50)").count())
   }
+
+  test("recluster keeps the table's txn marks: a replayed batch stays a no-op") {
+    import spark.implicits._
+    val cat = freshCatalog()
+    def rows(ids: Range) = ids.map(i => (i.toLong, i % 13, i % 29)).toDF("id", "x", "y")
+    cat.write("ns", "t", rows(1 to 200))
+    assert(cat.writeTxn("ns", "t", "app", 5L, rows(201 to 220)).nonEmpty)
+    cat.recluster("ns", "t", Seq("x", "y"), commits = 4)
+    assert(cat.txnVersion("ns", "t", "app").contains(5L))
+    assert(cat.writeTxn("ns", "t", "app", 5L, rows(201 to 220)).isEmpty)
+    assert(cat.read("ns", "t").count() == 220)
+  }
 }
